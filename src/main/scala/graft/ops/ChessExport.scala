@@ -1,14 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
-/** Fan-in + publish (SURVEY.md §2 S7-S9, P2, P5, F6-F8; reference:
+/** Per-source publish (SURVEY.md §2 S7-S9, P2, P5, F6-F8; reference:
   * src/export-to-parquet.ts:40-112).
   *
   * Reference semantics reproduced:
-  *  - deterministic sorted source order for the union (ts:40-42) — here the
-  *    caller passes sources sorted by key and we `unionByName` in that order;
   *  - the 20-column export projection (ts:69-94) incl.
   *    `COALESCE(clean_timecontrol, TimeControl) AS TimeControl` (ts:85);
   *  - quality filter `UTCDate IS NOT NULL AND year(UTCDate) >= 1500`
@@ -19,16 +19,25 @@ import org.apache.spark.sql.functions._
   *  - Hive-partitioned parquet `DataSource=…/year=…/month=…` with clean
   *    overwrite (ts:106-112, 51-56).
   *
+  * Each source owns its `DataSource=<key>` subtree: [[publish]] writes a
+  * source's rows to a temp dir under `_graft_publish/` (a `_` name, so
+  * Spark's file index skips it), deletes the old subtree and moves the new
+  * one into its place. The published tree therefore always equals a
+  * from-scratch build of the sources last published — a cell whose games
+  * vanished goes with its subtree — and [[retain]] removes the subtrees of
+  * sources no longer in the registry.
+  *
   * Scale notes: the reference layout produced 7.5k partitions × ~750 KB files
   * (BASELINE.md — small-file regime). The write goes through
-  * [[PartitionedSink]] (r9): REBALANCE on the partition columns keeps one
-  * file per Hive cell at this scale and O(cells) files at 100 TB, while
-  * letting AQE split a mega source-month cell across tasks instead of
-  * serializing it into one straggler, with a per-file record cap as the
-  * AQE-independent bound. Dynamic partition overwrite leaves other
-  * partitions in place on incremental re-publish.
+  * [[PartitionedSink]]: REBALANCE on the partition columns keeps one file
+  * per Hive cell at this scale and O(cells) files at 100 TB, while letting
+  * AQE split a mega source-month cell across tasks instead of serializing
+  * it into one straggler, with a per-file record cap as the AQE-independent
+  * bound.
   */
 object ChessExport {
+
+  private val TempDir = "_graft_publish"
 
   /** The 20-column export projection over an enriched games DF
     * (export-to-parquet.ts:69-94; UTCDate is a data column in addition to
@@ -46,13 +55,42 @@ object ChessExport {
         year(col("UTCDate")).as("year"),
         date_format(col("UTCDate"), "MM").as("month"))
 
-  /** Union enriched per-source DFs (caller-sorted), project, write. */
-  def publish(sources: Seq[DataFrame], outDir: String): Unit = {
-    require(sources.nonEmpty, "no sources to export")
-    val combined = sources.map(exportProjection).reduce(_.unionByName(_))
-    // dynamic: only partitions present in this run are replaced; static
-    // overwrite would wipe the whole outDir on an incremental re-publish
-    PartitionedSink.write(combined, Seq("DataSource", "year", "month"),
-      outDir, dynamicOverwrite = true)
+  /** The directory name of source `key`'s subtree, escaped as Spark's
+    * partitioned writer escapes it. */
+  def sourceDir(key: String): String =
+    ExternalCatalogUtils.getPartitionPathString("DataSource", key)
+
+  /** Project source `key`'s enriched games (every row tagged
+    * `DataSource = key`) and replace its subtree under `outDir` with them.
+    * A source with no exportable game ends with no subtree. Returns whether
+    * a subtree was published.
+    */
+  def publish(games: DataFrame, key: String, outDir: String): Boolean = {
+    val cell = sourceDir(key)
+    val temp = new HPath(new HPath(outDir, TempDir), cell)
+    val fs = temp.getFileSystem(games.sparkSession.sessionState.newHadoopConf())
+    PartitionedSink.write(exportProjection(games),
+      Seq("DataSource", "year", "month"), temp.toString)
+    val fresh = new HPath(temp, cell)
+    val target = new HPath(outDir, cell)
+    fs.delete(target, true)
+    val moved = fs.exists(fresh)
+    if (moved && !fs.rename(fresh, target))
+      throw new java.io.IOException(s"publish failed: $fresh -> $target")
+    fs.delete(temp, true)
+    moved
+  }
+
+  /** Delete every `DataSource=` subtree under `outDir` that is not one of
+    * `keys`, and the temp dir [[publish]] leaves behind. */
+  def retain(spark: SparkSession, keys: Seq[String], outDir: String): Unit = {
+    val out = new HPath(outDir)
+    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
+    // a glob under a missing dir matches nothing
+    val kept = keys.map(sourceDir).toSet
+    fs.globStatus(new HPath(out, "DataSource=*")).map(_.getPath)
+      .filterNot(p => kept.contains(p.getName))
+      .foreach(fs.delete(_, true))
+    fs.delete(new HPath(out, TempDir), true)
   }
 }

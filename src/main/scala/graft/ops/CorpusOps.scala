@@ -1159,12 +1159,8 @@ object CorpusOps {
     * same IEEE ops in the same order. Returns each chain's final
     * weights.
     *
-    * PRECONDITION (ADVICE r15): every predicate must match ≥1 row. A
-    * zero-row subset yields n=0 ⇒ 0/0 = NaN weights silently propagated,
-    * where the sequential single-chain form would instead NPE on the null
-    * decimal sums — the bit-equal contract is only total over nonempty
-    * subsets. All current callers partition nonempty frames (CV folds,
-    * reference split, learning-curve prefixes over a nonempty corpus).
+    * Every predicate must match ≥1 row: a zero-row subset has no gradient
+    * (n = 0), and fails the run instead of yielding NaN weights.
     */
   private[graft] def trainLogregMulti(feats: DataFrame,
       preds: Seq[Column]): Seq[Array[Double]] = {
@@ -1189,6 +1185,7 @@ object CorpusOps {
       val row = feats.agg(aggs.head, aggs.tail: _*).collect()(0)
       for (i <- 0 until k) {
         val n = row.getLong(row.fieldIndex(s"n_$i"))
+        require(n > 0, s"trainLogregMulti: chain $i's predicate matches no row")
         val denom = LogregPScale.toDouble * xs.toDouble * n.toDouble
         for (j <- 0 to 3)
           w(i)(j) = w(i)(j) - LogregLr *

@@ -150,8 +150,9 @@ object GraphOps {
     * explodes toward all-pairs), B/P grows ×k and the threshold scales
     * ×k with it, holding the supported-edge list at the same sparsity.
     * 14 ≈ 2× the observed B/P, so the first step (ms 2→3) fires at ~1.9×
-    * densification; `graft.tools.TriSweep densify` measures the valve
-    * closing on a ×10-densified corpus (BASELINE.md q117 knob row).
+    * densification. Measured on a ×10-densified corpus, the fixed
+    * threshold 2 admits 335× the edges while the adaptive one (11) holds
+    * the undensified graph exactly (BASELINE.md q117 knob row).
     */
   val TriDensityRef = 14L
 
@@ -229,9 +230,7 @@ object GraphOps {
   /** The UNthresholded supported-pair pipeline over a `(okey, pk)`
     * incidence frame — the single source of the co-purchase pair shape,
     * consumed by the memoized [[coPairs]] (with the adaptive support
-    * filter) and by [[graft.tools.TriSweep]] (which measures the same
-    * physical pipeline at other thresholds; a copy there would silently
-    * desync from what it claims to benchmark).
+    * filter).
     *
     * The per-basket `array_distinct` folds the incidence dedup into the
     * ONE groupBy shuffle (r9) — callers feed the raw `(okey, pk)`
@@ -268,11 +267,9 @@ object GraphOps {
     triangleTail(coPairs(spark, sfDir).select(col("a"), col("b")))
 
   /** Degree-oriented wedge + closure tail of q117 over an arbitrary
-    * undirected supported-edge list `(a, b)` — split out so the
-    * min-support sweep ([[graft.tools.TriSweep]], BASELINE.md q117 knob
-    * row) can measure the SAME physical pipeline at different edge
-    * densities; the gate query is this tail over [[coPairs]]' memoized
-    * [[TriMinSupport]]-supported edges.
+    * undirected supported-edge list `(a, b)`; the gate query is this tail
+    * over [[coPairs]]' memoized [[TriMinSupport]]-supported edges
+    * (BASELINE.md's q117 knob row measures it at other edge densities).
     */
   private[graft] def triangleTail(edges: DataFrame): DataFrame = {
     val deg = edges.select(col("a").as("n"))

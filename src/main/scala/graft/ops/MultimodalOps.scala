@@ -357,10 +357,10 @@ object MultimodalOps {
     candidatesFromHashed(hashed, arity)
   }
 
-  /** The banding stage off an already-hashed (media_id, chunks) frame —
-    * factored out (r11) so the payload-scan A/B tool
-    * (graft.tools.PhashPayloadAB) can drive probe and banding against
-    * shared vs independent hashed frames.
+  /** The banding stage off an already-hashed (media_id, chunks) frame, so
+    * the arity probe and the banding read ONE hashed frame: on
+    * decode-shaped 4 MB payloads that measured 2.22× faster than hashing
+    * the payloads once per consumer (BASELINE.md).
     */
   private[graft] def candidatesFromHashed(hashed: DataFrame, arity: Int)
       : DataFrame = {

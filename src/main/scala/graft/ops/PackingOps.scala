@@ -407,11 +407,10 @@ object PackingOps {
   val QuotaK = 20
 
   /** Synthetic mega-source frame for the quota-strategy SKEW
-    * measurements (ModeBench's `quota_skew` sweep and
-    * `graft.tools.SkewProbe` must generate the IDENTICAL corpus for
-    * their published numbers to be comparable — one definition): one
-    * source holds 80% of `n` rows, quality on the 1e-4 r4 grid
-    * (~400 tie rows per (mega, cell) at n = 5M).
+    * measurements (ModeBench's `quota_skew` sweep; the 50M-row walls in
+    * BASELINE/README were measured on this same frame): one source holds
+    * 80% of `n` rows, quality on the 1e-4 r4 grid (~400 tie rows per
+    * (mega, cell) at n = 5M).
     */
   def skewedScoredFrame(spark: SparkSession, n: Long): DataFrame =
     spark.range(n).select(

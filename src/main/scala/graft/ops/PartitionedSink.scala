@@ -3,9 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** The shared Hive-partitioned parquet sink tail (r9) — one place owning
-  * the layout discipline both publishers (ChessExport.publish, the
-  * CorpusBuild corpus write) previously hand-rolled with a bare
-  * `repartition(partCols)`:
+  * the layout discipline of every partitioned publisher (ChessExport.publish,
+  * the CorpusBuild corpus write, StreamingPublish's staged batches), which
+  * previously hand-rolled a bare `repartition(partCols)`:
   *
   *  - **REBALANCE hint on the partition columns** instead of a plain
   *    repartition: same one-task-per-cell → one-file-per-cell layout in
@@ -40,21 +40,14 @@ object PartitionedSink {
     */
   val MaxRecordsPerFile = 1000000L
 
-  /** `mode` defaults to Overwrite (the batch-publish contract);
-    * streaming foreachBatch publishers pass Append — per-micro-batch
-    * dynamic overwrite would WIPE a cell's earlier batches whenever two
-    * micro-batches touch the same Hive cell (r10 streaming E2E gate).
-    */
+  /** Overwrite `outDir` with `df`, partitioned by `partCols`. */
   def write(df: DataFrame, partCols: Seq[String], outDir: String,
-      maxRecordsPerFile: Long = MaxRecordsPerFile,
-      dynamicOverwrite: Boolean = false,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
+      maxRecordsPerFile: Long = MaxRecordsPerFile): Unit = {
     require(partCols.nonEmpty, "partitioned sink needs partition columns")
-    val w = df.hint("rebalance", partCols: _*)
+    df.hint("rebalance", partCols: _*)
       .write
-      .mode(mode)
+      .mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", maxRecordsPerFile)
-    (if (dynamicOverwrite) w.option("partitionOverwriteMode", "dynamic") else w)
       .partitionBy(partCols: _*)
       .parquet(outDir)
   }

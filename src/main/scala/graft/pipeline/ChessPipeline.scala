@@ -2,22 +2,38 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
+import java.util.concurrent.Executors
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.chess
 import graft.ops.{ChessExport, OpeningEnrichment}
 
 /** The whole-pipeline driver — Spark-native analog of the reference's DVC DAG
-  * (SURVEY.md §3 E1-E3): per source `ingest → normalize → enrich`, then
-  * fan-in `union → project → partitioned publish`.
+  * (SURVEY.md §3 E1-E3): per source `ingest → normalize → enrich → stage`,
+  * then `project → partitioned publish` of that source's own
+  * `DataSource=<key>` subtree ([[ChessExport.publish]]).
   *
   * Incrementality (the DVC content-hash analog, reference: dvc.lock): each
   * source's enriched staging output carries a manifest recording a hash of
-  * the input file list (path, size, mtime). When the manifest matches, the
-  * stage is skipped and the staged parquet reused — same skip granularity as
-  * the reference (per source), without re-reading input bytes.
+  * the input file list (path, size, mtime), the qualified publish root, and
+  * whether the source's last publish left a subtree. When the manifest
+  * matches — same inputs, same `outDir`, and the subtree still there (or
+  * still absent) — the source is skipped and its staged parquet and
+  * published subtree are left as they are: same skip granularity as the
+  * reference (per source), without re-reading input bytes. The manifest is
+  * written only after the source's new subtree has been swapped into
+  * place, so a run that dies before the swap restages the source next
+  * time. The published tree thus always equals a from-scratch build: a
+  * restaged source's vanished cells go with its old subtree, a source
+  * dropped from the registry loses its subtree, and a deleted or new
+  * `outDir` is republished.
   */
 object ChessPipeline {
 
@@ -69,7 +85,10 @@ object ChessPipeline {
     }
 
   /** Full run. `stagingDir` holds per-source enriched parquet + manifests;
-    * `outDir` gets the partitioned publish.
+    * `outDir` gets the partitioned publish, one `DataSource=<key>` subtree
+    * per source. A source is restaged and republished when its manifest
+    * does not match; every other source's subtree is left as it is, and
+    * the subtree of a source no longer in `sources` is deleted.
     */
   def run(
       spark: SparkSession,
@@ -77,68 +96,73 @@ object ChessPipeline {
       openings: DataFrame,
       stagingDir: String,
       outDir: String): Unit = {
-    val sorted = sources.sortBy(_.key) // deterministic fan-in order (W2/J3)
+    // an empty registry would delete every published subtree
+    require(sources.nonEmpty, "no sources to run")
+    val sorted = sources.sortBy(_.key)
     // the openings dimension is a dependency of every enrich stage (the
     // reference's DVC DAG tracks it the same way, dvc.yaml:38-50): fold its
     // content fingerprint into each manifest so an updated dimension
     // invalidates the staged enrichment
     val openingsFp = openingsFingerprint(openings)
-    val manifests = sorted.map { src =>
-      src.key -> (inputManifest(src.pgnDir) + ":" + openingsFp)
+    // the qualified outDir: staging reused against another outDir must
+    // republish there
+    val out = new HPath(outDir)
+    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
+    val root = fs.makeQualified(out)
+    val manifests = sorted.map { s =>
+      s -> Seq(ManifestFormat, root, inputManifest(s.pgnDir), openingsFp).mkString("\n")
     }.toMap
-    // stage sources in a bounded-concurrency window; each closure runs
-    // independent Spark jobs (the scheduler interleaves their tasks).
-    // Validation markdown is RETURNED and printed in source order below —
-    // concurrent stages must not interleave their report lines.
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    def manifest(s: Source, published: Boolean) = s"${manifests(s)}\npublished=$published"
+    def stage(s: Source) = s"$stagingDir/${s.key}"
+    // skip a source only while its subtree is as its last publish left it
+    val stale = sorted.filterNot { s =>
+      val published = fs.exists(new HPath(out, ChessExport.sourceDir(s.key)))
+      readManifest(stage(s)).contains(manifest(s, published))
+    }
+    // stage and publish sources in a bounded-concurrency window; each
+    // closure runs independent Spark jobs (the scheduler interleaves their
+    // tasks). Validation markdown is RETURNED and printed in source order
+    // below — concurrent stages must not interleave their report lines.
+    import spark.implicits._
     val pool = Executors.newFixedThreadPool(
-      math.max(1, math.min(sourceConcurrency(spark), sorted.size)))
+      math.max(1, math.min(sourceConcurrency(spark), stale.size)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val reports = sorted.map { src =>
-      Future {
-        val stage = s"$stagingDir/${src.key}"
-        if (readManifest(stage).contains(manifests(src.key))) {
-          s"[pipeline] skip ${src.key} (manifest match)"
-        } else {
-          ingestAndEnrich(spark, src, openings)
-            .write.mode(SaveMode.Overwrite).parquet(stage)
-          writeManifest(stage, manifests(src.key))
-          // validation tables (S10): same three statements the reference
-          // renders through `duckdb -markdown` at read-pgn.ts:54-56 —
-          // total count, parse-error count, and the parse-error rows
-          val staged = spark.read.parquet(stage)
-          val bad = staged.filter(col("parse_error").isNotNull)
-          Seq(
-            s"[pipeline] ${src.key}:",
-            Markdown.render(staged.agg(count(lit(1)).as("games"))),
-            Markdown.render(bad.agg(count(lit(1)).as("parse_errors"))),
-            Markdown.render(
-              bad.select(col("game_id"), col("Event"), col("parse_error")),
-              maxRows = 20)
-          ).mkString("\n")
-        }
+      if (!stale.contains(src))
+        Future.successful(s"[pipeline] skip ${src.key} (manifest match)")
+      else Future {
+        // validation tables (S10): same three statements the reference
+        // renders through `duckdb -markdown` at read-pgn.ts:54-56 — total
+        // count, parse-error count, and the parse-error rows. The counts
+        // are observed on the staging write; the rows are read back only
+        // when there are any.
+        val obs = Observation()
+        val enriched = ingestAndEnrich(spark, src, openings)
+        enriched.observe(obs, count(lit(1)).as("games"),
+            count(col("parse_error")).as("parse_errors"))
+          .write.mode(SaveMode.Overwrite).parquet(stage(src))
+        // the known schema spares a schema-inference job
+        val staged = spark.read.schema(enriched.schema).parquet(stage(src))
+        val published = ChessExport.publish(staged, src.key, outDir)
+        // only after the swap: a run that dies before it leaves no
+        // manifest, so the next run restages this source
+        writeManifest(stage(src), manifest(src, published))
+        val counts = obs.get.view.mapValues(_.asInstanceOf[Long])
+        val bad = staged.filter(col("parse_error").isNotNull)
+          .select(col("game_id"), col("Event"), col("parse_error"))
+        Seq(
+          s"[pipeline] ${src.key}:",
+          Markdown.render(Seq(counts("games")).toDF("games")),
+          Markdown.render(Seq(counts("parse_errors")).toDF("parse_errors")),
+          Markdown.render(if (counts("parse_errors") > 0) bad else bad.limit(0),
+            maxRows = 20)
+        ).mkString("\n")
       }
     }
     try reports.foreach(r => println(Await.result(r, Duration.Inf)))
     finally pool.shutdown()
-    // publish-level manifest (the reference's DVC skip applies to the
-    // export stage too): when every per-source manifest AND the published
-    // output's own marker match, the fan-in + partitioned write is
-    // skipped entirely — a no-change re-run touches no data files
-    val publishFp = {
-      val md = MessageDigest.getInstance("SHA-256")
-      sorted.foreach(s =>
-        md.update(s"${s.key}=${manifests(s.key)}\n".getBytes("UTF-8")))
-      md.digest().map("%02x".format(_)).mkString
-    }
-    if (readManifest(outDir).contains(publishFp)) {
-      println(s"[pipeline] skip publish (manifest match)")
-    } else {
-      val dfs = sorted.map(s => spark.read.parquet(s"$stagingDir/${s.key}"))
-      ChessExport.publish(dfs, outDir)
-      writeManifest(outDir, publishFp)
+    ChessExport.retain(spark, sorted.map(_.key), outDir)
+    if (stale.nonEmpty) {
       // combined-count validation (export-to-parquet.ts:102-104)
       println("[pipeline] published:")
       println(Markdown.render(
@@ -149,30 +173,30 @@ object ChessPipeline {
 
   // --- manifest (DVC-hash analog) ---
 
+  /** First line of every manifest; changed whenever what a manifest
+    * records changes, so one written by an older layout never matches. */
+  private val ManifestFormat = "graft-manifest/2"
+
   /** Content fingerprint of the (small) openings dimension: SHA-256 over the
     * sorted rows. ~3.5k rows at reference scale — a driver collect is fine.
     */
-  private def openingsFingerprint(openings: DataFrame): String = {
-    val md = MessageDigest.getInstance("SHA-256")
-    openings.select("eco", "name", "pgn", "uci").collect()
-      .map(r => (0 until 4).map(r.get(_)).mkString(""))
-      .sorted
-      .foreach(s => md.update((s + "\n").getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
+  private def openingsFingerprint(openings: DataFrame): String =
+    sha256(openings.select("eco", "name", "pgn", "uci").collect()
+      .map(r => (0 until 4).map(r.get(_)).mkString("")).sorted.toSeq)
 
   private def inputManifest(dir: String): String = {
     val root = Paths.get(dir)
     if (!Files.exists(root)) return "missing"
-    val md = MessageDigest.getInstance("SHA-256")
-    import scala.jdk.CollectionConverters._
-    Files.walk(root).iterator().asScala
+    sha256(Files.walk(root).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.toLowerCase.endsWith(".pgn"))
       .toSeq.sortBy(_.toString)
-      .foreach { p =>
-        md.update(s"$p|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}\n"
-          .getBytes("UTF-8"))
-      }
+      .map(p => s"$p|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"))
+  }
+
+  /** Hex SHA-256 over `lines`, each newline-terminated. */
+  private def sha256(lines: Seq[String]): String = {
+    val md = MessageDigest.getInstance("SHA-256")
+    lines.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
     md.digest().map("%02x".format(_)).mkString
   }
 
@@ -198,11 +222,11 @@ object ChessPipelineMain {
     val spark = chess.session("graft-chess-pipeline",
       s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
     spark.sparkContext.setLogLevel("WARN")
-    import scala.jdk.CollectionConverters._
     val sources = Files.list(Paths.get(inRoot)).iterator().asScala
       .filter(Files.isDirectory(_))
       .map(p => ChessPipeline.Source(p.getFileName.toString, p.toString))
       .toSeq
+    require(sources.nonEmpty, s"no source directory under $inRoot")
     val openings = graft.sources.OpeningsSource.load(spark, openingsPath)
     ChessPipeline.run(spark, sources, openings, stagingDir, outDir)
     spark.stop()

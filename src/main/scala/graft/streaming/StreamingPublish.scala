@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ops.PartitionedSink
 
@@ -397,8 +397,7 @@ object StreamingPublish {
     if (!committed.contains(batchId)) {
       if (!fs.exists(sentinel)) {
         fs.delete(stage, true)
-        PartitionedSink.write(batch, partCols, stage.toString,
-          mode = SaveMode.Overwrite)
+        PartitionedSink.write(batch, partCols, stage.toString)
         promoteStaged(fs, stage, out, batchId,
           copyFallback = !renameMarkers)
         commitMarker(fs, renameMarkers, sentinel, s"done\n$Terminator\n")

@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.nio.file.attribute.FileTime
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -148,6 +151,13 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(capped.split("\n").length == 7 && capped.contains("..."), capped)
   }
 
+  /** Every regular file under `dirs` with its size and modification time. */
+  private def snapshot(dirs: Path*): Map[String, (Long, FileTime)] =
+    dirs.flatMap { d =>
+      Files.walk(d).iterator().asScala.filter(Files.isRegularFile(_)).map(p =>
+        p.toString -> (Files.size(p), Files.getLastModifiedTime(p))).toSeq
+    }.toMap
+
   test("manifest skip: second run reuses staging") {
     val openings = spark.read.parquet(root.resolve("openings").toString)
     val sources = Seq(
@@ -156,9 +166,122 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
     ChessPipeline.run(spark, sources, openings, stage, root.resolve("out2").toString)
     val mtime = Files.getLastModifiedTime(
       root.resolve("staging2/src_a/_graft_manifest"))
+    val before = snapshot(root.resolve("staging2"), root.resolve("out2"))
     ChessPipeline.run(spark, sources, openings, stage, root.resolve("out2").toString)
     // manifest untouched → stage skipped
     assert(Files.getLastModifiedTime(
       root.resolve("staging2/src_a/_graft_manifest")) == mtime)
+    // and the skip adds, rewrites or deletes no file under staging or out
+    assert(snapshot(root.resolve("staging2"), root.resolve("out2")) == before)
+  }
+
+  test("empty source list fails fast") {
+    val openings = spark.read.parquet(root.resolve("openings").toString)
+    intercept[IllegalArgumentException] {
+      ChessPipeline.run(spark, Nil, openings,
+        root.resolve("staging3").toString, root.resolve("out3").toString)
+    }
+  }
+
+  /** The published rows as a sorted multiset of canonical strings. */
+  private def rowsOf(out: Path): Seq[String] = {
+    val df = spark.read.parquet(out.toString)
+    df.select(df.columns.sorted.toIndexedSeq.map(c => col(c).cast("string")): _*)
+      .collect().map(_.mkString("|")).sorted.toSeq
+  }
+
+  /** Every directory of the published tree, relative to it, outside
+    * `_`-named (hidden) dirs. */
+  private def cellsOf(out: Path): Set[String] =
+    Files.walk(out).iterator().asScala.filter(Files.isDirectory(_))
+      .map(out.relativize(_).toString)
+      .filter(r => r.nonEmpty && !r.split('/').exists(_.startsWith("_")))
+      .toSet
+
+  /** Runs the pipeline over a tree where `src_a` holds a January and a
+    * February file and `src_b` one game, then `change`s the tree (it returns
+    * the new registry) and re-runs incrementally. The re-run's publish must
+    * equal a from-scratch build of the changed tree, row for row and cell
+    * for cell. Returns the incremental publish dir.
+    */
+  private def incrementalVsScratch(change: Path => Seq[ChessPipeline.Source]): Path = {
+    val d = Files.createTempDirectory("chess_incr")
+    val a = Files.createDirectories(d.resolve("in/src_a"))
+    val b = Files.createDirectories(d.resolve("in/src_b"))
+    Files.writeString(a.resolve("jan.pgn"),
+      pgn("P1", "2020.01.15", "1. e4 e5 2. Nf3 Nc6 3. Bb5 a6"))
+    Files.writeString(a.resolve("feb.pgn"), pgn("P2", "2020.02.20", "1. d4 d5 2. c4 e6"))
+    Files.writeString(b.resolve("one.pgn"), pgn("P3", "2021.03.10", "1. e4 e5 2. Nf3 Nc6"))
+    val openings = spark.read.parquet(root.resolve("openings").toString)
+    val out = d.resolve("out")
+    ChessPipeline.run(spark, both(d), openings, d.resolve("staging").toString, out.toString)
+    assert(Files.exists(out.resolve("DataSource=src_a/year=2020/month=02")))
+    val sources = change(d)
+    ChessPipeline.run(spark, sources, openings, d.resolve("staging").toString, out.toString)
+    val scratch = d.resolve("scratch_out")
+    ChessPipeline.run(spark, sources, openings,
+      d.resolve("scratch_staging").toString, scratch.toString)
+    assert(cellsOf(out) == cellsOf(scratch))
+    assert(rowsOf(out) == rowsOf(scratch))
+    assert(!Files.exists(out.resolve("_graft_publish")))
+    out
+  }
+
+  private def both(d: Path) = Seq(
+    ChessPipeline.Source("src_a", d.resolve("in/src_a").toString),
+    ChessPipeline.Source("src_b", d.resolve("in/src_b").toString))
+
+  test("incremental re-run equals a from-scratch build: a vanished cell is deleted") {
+    val out = incrementalVsScratch { d =>
+      Files.delete(d.resolve("in/src_a/feb.pgn"))
+      both(d)
+    }
+    assert(!Files.exists(out.resolve("DataSource=src_a/year=2020/month=02")))
+    assert(Files.exists(out.resolve("DataSource=src_a/year=2020/month=01")))
+  }
+
+  test("incremental re-run equals a from-scratch build: a dropped source loses its subtree") {
+    val out = incrementalVsScratch { d =>
+      Seq(ChessPipeline.Source("src_a", d.resolve("in/src_a").toString))
+    }
+    assert(!Files.exists(out.resolve("DataSource=src_b")))
+  }
+
+  test("incremental re-run equals a from-scratch build: a source left with only pre-1500 games publishes nothing") {
+    val out = incrementalVsScratch { d =>
+      Files.delete(d.resolve("in/src_a/feb.pgn"))
+      Files.writeString(d.resolve("in/src_a/jan.pgn"), pgn("Old", "1499.12.31", "1. e4 e5"))
+      both(d)
+    }
+    assert(!Files.exists(out.resolve("DataSource=src_a")))
+    assert(Files.exists(out.resolve("DataSource=src_b/year=2021/month=03")))
+    // its manifest records that it published nothing, so the next run
+    // skips it and changes no file
+    val d = out.getParent
+    val before = snapshot(d.resolve("staging"), out)
+    ChessPipeline.run(spark, both(d), spark.read.parquet(root.resolve("openings").toString),
+      d.resolve("staging").toString, out.toString)
+    assert(snapshot(d.resolve("staging"), out) == before)
+  }
+
+  private def deleteTree(p: Path): Unit =
+    Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete(_))
+
+  test("incremental re-run equals a from-scratch build: a deleted outDir is republished") {
+    val out = incrementalVsScratch { d =>
+      deleteTree(d.resolve("out"))
+      both(d)
+    }
+    assert(Files.exists(out.resolve("DataSource=src_a/year=2020/month=02")))
+  }
+
+  test("staging reused against a new outDir publishes every source there") {
+    val out = incrementalVsScratch(both)
+    val d = out.getParent
+    val moved = d.resolve("out_new")
+    ChessPipeline.run(spark, both(d), spark.read.parquet(root.resolve("openings").toString),
+      d.resolve("staging").toString, moved.toString)
+    assert(cellsOf(moved) == cellsOf(out))
+    assert(rowsOf(moved) == rowsOf(out))
   }
 }

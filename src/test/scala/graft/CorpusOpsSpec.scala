@@ -937,6 +937,17 @@ class CorpusOpsSpec extends AnyFunSuite with SparkTestBase {
       s"selection ${rows.map(_._1).toSeq} != replay $expect")
   }
 
+  test("trainLogregMulti: a chain whose subset is empty fails fast, naming the chain") {
+    val s = spark
+    import s.implicits._
+    val feats = Seq((100L, 200L, 300L, 1L), (50L, 20L, 10L, 0L))
+      .toDF("x1s", "x2s", "x3s", "y")
+    val e = intercept[IllegalArgumentException] {
+      CorpusOps.trainLogregMulti(feats, Seq(lit(true), lit(false)))
+    }
+    assert(e.getMessage.contains("chain 1"), e.getMessage)
+  }
+
   // ---------------------------------------------------------------- q246
 
   test("signalCorrelation: bounded, and matches a driver-side Pearson") {
