@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Opening enrichment — the reference's flagship operator (SURVEY.md §2.3
@@ -13,18 +14,17 @@ import org.apache.spark.sql.functions._
   * total order (opening_ply, eco, name) maximal (documented divergence,
   * SURVEY.md §7).
   *
-  * Two physical forms, same logical result:
-  *
+  *  - [[enrichTrie]] — the pipeline form, for batch and streaming frames
+  *    alike: every openings `pgn` is a move-sequence PREFIX, so a broadcast
+  *    trie matches prefix-with-word-boundary (match must end at
+  *    end-of-string or a space) in one walk of each game's movetext —
+  *    O(len) per game instead of O(#openings × len) substring scans. The
+  *    lookup is a per-row column (no join, no shuffle, no state), so it
+  *    runs in any streaming output mode.
   *  - [[enrich]] — declarative parity form: broadcast theta-join on
   *    `contains(clean_movetext, pgn)` + per-game argmax via `max(struct(…))`
-  *    (partial-aggregable, map-side combine; no window shuffle-sort). This is
-  *    the form the DuckDB oracle SQL mirrors 1:1.
-  *  - [[enrichTrie]] — scale form: every openings `pgn` is a move-sequence
-  *    PREFIX, so the trie matches prefix-with-word-boundary (match must end
-  *    at end-of-string or a space). A broadcast trie walks each game once:
-  *    O(len) per game instead of O(#openings × len) substring scans — the
-  *    difference between 3.5k contains calls and one string walk per row at
-  *    100 TB.
+  *    and a join write-back. This is the form the DuckDB oracle SQL mirrors
+  *    1:1.
   *
   * DELIBERATE DIVERGENCE (documented, SURVEY.md §7): the reference's
   * CONTAINS also matches an opening line appearing as an INTERIOR substring
@@ -34,16 +34,21 @@ import org.apache.spark.sql.functions._
   * what tools/chess_golden.py oracles) are anchored prefix + boundary;
   * [[enrich]] keeps the literal contains form only as the 1:1 replay of the
   * reference SQL for the parity proof of the join/argmax shape.
-  *
-  * Both forms shuffle exactly once (the argmax groupBy in `enrich`; none at
-  * all in `enrichTrie` — the trie match is a map and the write-back a
-  * broadcastable join of the small matched side).
   */
 object OpeningEnrichment {
 
   /** openings(eco,name,pgn,uci) → + opening_ply (reference: find-openings.ts:65). */
   def withPly(openings: DataFrame): DataFrame =
     openings.withColumn("opening_ply", size(split(col("uci"), " ")))
+
+  /** The openings rows a trie is built from: (eco, name, pgn, uci, opening_ply). */
+  def dimension(openings: DataFrame): DataFrame =
+    withPly(openings).select("eco", "name", "pgn", "uci", "opening_ply")
+
+  /** Builds the trie over collected [[dimension]] rows and broadcasts it. */
+  def broadcastTrie(spark: SparkSession, rows: Seq[Row]): Broadcast[OpeningTrie] =
+    spark.sparkContext.broadcast(OpeningTrie.build(rows.map(r =>
+      (r.getString(2), r.getInt(4), r.getString(0), r.getString(1)))))
 
   /** Parity form: broadcast contains-join + argmax. */
   def enrich(games: DataFrame, openings: DataFrame): DataFrame = {
@@ -61,96 +66,29 @@ object OpeningEnrichment {
     writeBack(games, best)
   }
 
-  /** Scale form: broadcast trie, one pass per game, zero shuffle on the fact
-    * side (the matched set is small relative to games and joins back
-    * broadcast under AQE).
+  /** Trie form over a one-off broadcast of `openings`' trie. */
+  def enrichTrie(games: DataFrame, openings: DataFrame): DataFrame =
+    enrichTrie(games, broadcastTrie(games.sparkSession,
+      dimension(openings).collect().toIndexedSeq))
+
+  /** Trie form: only Opening-IS-NULL rows are probed; a match overwrites
+    * ECO and fills Opening, a miss leaves the row untouched. The lookup
+    * UDF captures the broadcast handle, not the trie, so task binaries
+    * stay small, and the match column is referenced twice, so the
+    * optimizer keeps it a single walk per row.
     */
-  def enrichTrie(games: DataFrame, openings: DataFrame): DataFrame = {
-    val spark = games.sparkSession
-    import spark.implicits._
-    val rows = withPly(openings).select("pgn", "opening_ply", "eco", "name")
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3)))
-    val trie = OpeningTrie.build(rows.toIndexedSeq)
-    val bc = spark.sparkContext.broadcast(trie)
-    val matched = games.filter(col("Opening").isNull)
-      .select(col("game_id"), col("clean_movetext"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val t = bc.value
-        it.flatMap { case (id, mt) =>
-          t.longestMatch(mt).map { case (eco, name) => (id, eco, name) }
-        }
-      }
-      .toDF("t_game_id", "m_eco", "m_name")
-    writeBack(games, matched)
+  def enrichTrie(games: DataFrame, trie: Broadcast[OpeningTrie]): DataFrame = {
+    val lookup = udf((mt: String) => trie.value.longestMatch(mt))
+    games
+      .withColumn("__m", when(col("Opening").isNull, lookup(col("clean_movetext"))))
+      .withColumn("ECO", coalesce(col("__m._1"), col("ECO")))
+      .withColumn("Opening", coalesce(col("Opening"), col("__m._2")))
+      .drop("__m")
   }
 
-  /** Streaming form: rows carry their movetext, the trie is a broadcast —
-    * enrichment becomes a pure per-row map (no join at all), so it runs in
-    * any streaming output mode with zero state. This is the live-ingest
-    * version of the flagship operator: a PGN drop-directory stream
-    * (`readStream.format("pgn")`) → this → `writeStream`.
-    */
-  final case class GameLite(game_id: Long, clean_movetext: String,
-      ECO: String, Opening: String)
-
-  def enrichStream(
-      games: org.apache.spark.sql.Dataset[GameLite],
-      openings: DataFrame): org.apache.spark.sql.Dataset[GameLite] = {
-    val spark = games.sparkSession
-    import spark.implicits._
-    val rows = withPly(openings).select("pgn", "opening_ply", "eco", "name")
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3)))
-    val bc = spark.sparkContext.broadcast(OpeningTrie.build(rows.toIndexedSeq))
-    games.mapPartitions { it =>
-      val t = bc.value
-      it.map { g =>
-        if (g.Opening != null) g
-        else t.longestMatch(g.clean_movetext) match {
-          case Some((eco, name)) => g.copy(ECO = eco, Opening = name)
-          case None => g
-        }
-      }
-    }
-  }
-
-  /** Full-row streaming enrichment (r10): [[enrichStream]] is the typed
-    * GameLite form; the streaming CORPUS pipeline (drop-dir →
-    * enrichment → 20-column partitioned publish) needs every column to
-    * survive, so this applies the identical broadcast trie as a pure
-    * per-row map over the full Row (Encoders.row keeps the schema) —
-    * still zero joins, zero state, any output mode. Semantics are
-    * bit-identical to batch [[enrichTrie]] + writeBack: only
-    * Opening-IS-NULL rows are probed; a match overwrites ECO and fills
-    * Opening, a miss leaves the row untouched.
-    */
-  def enrichStreamRows(games: DataFrame, openings: DataFrame): DataFrame = {
-    val spark = games.sparkSession
-    val rows = withPly(openings).select("pgn", "opening_ply", "eco", "name")
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3)))
-    val bc = spark.sparkContext.broadcast(OpeningTrie.build(rows.toIndexedSeq))
-    val schema = games.schema
-    val mtIdx = schema.fieldIndex("clean_movetext")
-    val ecoIdx = schema.fieldIndex("ECO")
-    val opIdx = schema.fieldIndex("Opening")
-    games.mapPartitions { it =>
-      val t = bc.value
-      it.map { r =>
-        if (!r.isNullAt(opIdx)) r
-        else t.longestMatch(r.getString(mtIdx)) match {
-          case Some((eco, name)) =>
-            val vs = r.toSeq.toArray
-            vs(ecoIdx) = eco
-            vs(opIdx) = name
-            org.apache.spark.sql.Row.fromSeq(vs.toIndexedSeq)
-          case None => r
-        }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
-  }
+  /** Kept name for [[enrichTrie]], which serves streaming frames as is. */
+  def enrichStreamRows(games: DataFrame, openings: DataFrame): DataFrame =
+    enrichTrie(games, openings)
 
   /** J2 rewrite: no in-place UPDATE on immutable storage — left-join the
     * matched (game_id → eco,name) back and coalesce (reference:

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.chess
+import graft.pipeline.ChessPipeline
 import graft.sources.OpeningsSource
 
 /** q35: the full chess-lakehouse stack as a driver-gate query — bundled PGN
@@ -52,10 +52,7 @@ object PgnDemo {
     * the golden replay starts from — mirrors ChessPipeline's staging).
     */
   def stagedGames(spark: SparkSession): DataFrame =
-    spark.read.format("pgn").load(fixturePath().toString)
-      .withColumn("clean_movetext", chess.movesNormalize(col("movetext")))
-      .withColumn("clean_timecontrol", chess.timecontrolNormalize(col("TimeControl")))
-      .withColumn("DataSource", lit("fixture"))
+    ChessPipeline.normalize(spark.read.format("pgn").load(fixturePath().toString), "fixture")
 
   def fixtureOpeningsDF(spark: SparkSession): DataFrame = {
     import spark.implicits._

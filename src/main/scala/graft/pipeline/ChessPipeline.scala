@@ -9,11 +9,12 @@ import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.chess
-import graft.ops.{ChessExport, OpeningEnrichment}
+import graft.ops.{ChessExport, OpeningEnrichment, OpeningTrie}
 
 /** The whole-pipeline driver — Spark-native analog of the reference's DVC DAG
   * (SURVEY.md §3 E1-E3): per source `ingest → normalize → enrich → stage`,
@@ -39,19 +40,23 @@ object ChessPipeline {
 
   case class Source(key: String, pgnDir: String)
 
-  /** One source: PGN scan → normalize columns → enrich → DataSource tag.
-    * Mirrors read-pgn.ts (S1/P1) + find-openings.ts (D1/D2/J1/J2).
+  /** PGN games → normalize columns → DataSource tag, on a batch or a
+    * streaming read of the `pgn` format. Mirrors read-pgn.ts (S1/P1).
+    */
+  def normalize(games: DataFrame, key: String): DataFrame = games
+    .withColumn("clean_movetext", chess.movesNormalize(col("movetext")))
+    .withColumn("clean_timecontrol", chess.timecontrolNormalize(col("TimeControl")))
+    .withColumn("DataSource", lit(key))
+
+  /** One source: PGN scan → [[normalize]] → enrich against a broadcast
+    * openings trie. Mirrors read-pgn.ts + find-openings.ts (D1/D2/J1/J2).
     */
   def ingestAndEnrich(
       spark: SparkSession,
       source: Source,
-      openings: DataFrame): DataFrame = {
-    val games = spark.read.format("pgn").load(source.pgnDir)
-      .withColumn("clean_movetext", chess.movesNormalize(col("movetext")))
-      .withColumn("clean_timecontrol", chess.timecontrolNormalize(col("TimeControl")))
-      .withColumn("DataSource", lit(source.key))
-    OpeningEnrichment.enrichTrie(games, openings)
-  }
+      trie: Broadcast[OpeningTrie]): DataFrame =
+    OpeningEnrichment.enrichTrie(
+      normalize(spark.read.format("pgn").load(source.pgnDir), source.key), trie)
 
   /** Bounded source-stage concurrency. The per-source DAGs (scan →
     * normalize → enrich → staging write) are independent, and one
@@ -102,8 +107,12 @@ object ChessPipeline {
     // the openings dimension is a dependency of every enrich stage (the
     // reference's DVC DAG tracks it the same way, dvc.yaml:38-50): fold its
     // content fingerprint into each manifest so an updated dimension
-    // invalidates the staged enrichment
-    val openingsFp = openingsFingerprint(openings)
+    // invalidates the staged enrichment. One collect feeds the fingerprint
+    // and the trie; the trie is broadcast only if a source is restaged,
+    // and then once for all of them.
+    val dim = OpeningEnrichment.dimension(openings).collect().toIndexedSeq
+    val openingsFp = sha256(dim.map(r => (0 until 4).map(r.get(_)).mkString("\u0001")).sorted)
+    lazy val trie = OpeningEnrichment.broadcastTrie(spark, dim)
     // the qualified outDir: staging reused against another outDir must
     // republish there
     val out = new HPath(outDir)
@@ -137,7 +146,7 @@ object ChessPipeline {
         // are observed on the staging write; the rows are read back only
         // when there are any.
         val obs = Observation()
-        val enriched = ingestAndEnrich(spark, src, openings)
+        val enriched = ingestAndEnrich(spark, src, trie)
         enriched.observe(obs, count(lit(1)).as("games"),
             count(col("parse_error")).as("parse_errors"))
           .write.mode(SaveMode.Overwrite).parquet(stage(src))
@@ -165,8 +174,9 @@ object ChessPipeline {
     if (stale.nonEmpty) {
       // combined-count validation (export-to-parquet.ts:102-104)
       println("[pipeline] published:")
-      println(Markdown.render(
-        spark.read.parquet(outDir).agg(count(lit(1)).as("games"))))
+      // the partition column as the schema spares a schema-inference job
+      println(Markdown.render(spark.read.schema("DataSource STRING").parquet(outDir)
+        .agg(count(lit(1)).as("games"))))
     }
     println(s"[pipeline] → $outDir")
   }
@@ -176,13 +186,6 @@ object ChessPipeline {
   /** First line of every manifest; changed whenever what a manifest
     * records changes, so one written by an older layout never matches. */
   private val ManifestFormat = "graft-manifest/2"
-
-  /** Content fingerprint of the (small) openings dimension: SHA-256 over the
-    * sorted rows. ~3.5k rows at reference scale — a driver collect is fine.
-    */
-  private def openingsFingerprint(openings: DataFrame): String =
-    sha256(openings.select("eco", "name", "pgn", "uci").collect()
-      .map(r => (0 until 4).map(r.get(_)).mkString("")).sorted.toSeq)
 
   private def inputManifest(dir: String): String = {
     val root = Paths.get(dir)

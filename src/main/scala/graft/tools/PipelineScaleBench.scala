@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.ops.PgnDemo
 import graft.pipeline.ChessPipeline
@@ -167,22 +166,15 @@ object PipelineScaleBench {
           if (committedFiles.isEmpty) 0L
           else spark.read.parquet(committedFiles: _*).count()
         }
-      def normalize(df: org.apache.spark.sql.DataFrame) = df
-        .withColumn("clean_movetext",
-          graft.functions.chess.movesNormalize(col("movetext")))
-        .withColumn("clean_timecontrol",
-          graft.functions.chess.timecontrolNormalize(col("TimeControl")))
-      def srcStream(src: ChessPipeline.Source) =
-        normalize(spark.readStream.format("pgn").load(src.pgnDir))
-          .withColumn("DataSource", lit(src.key))
+      def srcStream(src: ChessPipeline.Source) = ChessPipeline.normalize(
+        spark.readStream.format("pgn").load(src.pgnDir), src.key)
       val raw = bounded match {
         case Some(n) =>
-          normalize(spark.readStream.format("pgn")
-            .option("maxFilesPerTrigger", n.toString).load(inRoot))
-            .withColumn("DataSource", lit("all"))
+          ChessPipeline.normalize(spark.readStream.format("pgn")
+            .option("maxFilesPerTrigger", n.toString).load(inRoot), "all")
         case None => sources.map(srcStream).reduce(_.unionByName(_))
       }
-      val enriched = OpeningEnrichment.enrichStreamRows(raw, openings)
+      val enriched = OpeningEnrichment.enrichTrie(raw, openings)
       // replay-idempotent publisher (foreachBatch is at-least-once)
       val publish = graft.streaming.StreamingPublish
         .partitionedPublisher(Seq("DataSource", "year", "month"), outS)

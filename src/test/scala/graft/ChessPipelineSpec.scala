@@ -2,12 +2,23 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.ops.OpeningEnrichment
 import graft.pipeline.ChessPipeline
+import graft.sources.PgnScan
 
 class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -166,6 +177,10 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
     ChessPipeline.run(spark, sources, openings, stage, root.resolve("out2").toString)
     val mtime = Files.getLastModifiedTime(
       root.resolve("staging2/src_a/_graft_manifest"))
+    // the openings fingerprint staging trees already on disk carry: a
+    // change to it would restage every source
+    assert(Files.readAllLines(root.resolve("staging2/src_a/_graft_manifest")).get(3) ==
+      "5dde9389de7d51962bf8b66ab8bf08bc53e062a8f37530e2c0ac3dc3959e0f3c")
     val before = snapshot(root.resolve("staging2"), root.resolve("out2"))
     ChessPipeline.run(spark, sources, openings, stage, root.resolve("out2").toString)
     // manifest untouched → stage skipped
@@ -283,5 +298,101 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
       d.resolve("staging").toString, moved.toString)
     assert(cellsOf(moved) == cellsOf(out))
     assert(rowsOf(moved) == rowsOf(out))
+  }
+
+  /** The jobs `body` launches: (short call site, whether the job runs
+    * inside a SQL query execution). Marker jobs before and after `body`
+    * fence the listener's view off from other work. */
+  private def jobsDuring(body: => Unit): Seq[(String, Boolean)] = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.marker"
+    val jobs = new ConcurrentLinkedQueue[(String, Boolean)]
+    val started, ended = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some("start") => started.countDown()
+          case Some(_) => ended.countDown()
+          // the result stage is named after the job's call site
+          case None => if (started.getCount == 0)
+            jobs.add((e.stageInfos.maxBy(_.stageId).name,
+              e.properties.getProperty("spark.sql.execution.id") != null))
+        }
+    }
+    def marker(m: String): Unit = {
+      sc.setLocalProperty(key, m)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(l)
+    try {
+      marker("start")
+      assert(started.await(60, TimeUnit.SECONDS))
+      body
+      marker("end")
+      assert(ended.await(60, TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(l)
+    jobs.asScala.toSeq
+  }
+
+  /** Broadcast variables created during `body` (their ids are sequential). */
+  private def broadcastsDuring(body: => Unit): Long = {
+    def nextId() = { val b = spark.sparkContext.broadcast(0); b.destroy(); b.id }
+    val from = nextId()
+    body
+    nextId() - from - 1
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  test("a source's staging write scans its PGN once and broadcasts nothing") {
+    val d = Files.createTempDirectory("chess_plan")
+    val plans = new ConcurrentLinkedQueue[QueryExecution]
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def pgnScans(p: SparkPlan) =
+      Plans.collect(p) { case s: BatchScanExec if s.scan.isInstanceOf[PgnScan] => s }
+    spark.listenerManager.register(l)
+    try {
+      ChessPipeline.run(spark, both(root), spark.read.parquet(root.resolve("openings").toString),
+        d.resolve("staging").toString, d.resolve("out").toString)
+      // one staging write per source
+      val staging = eventually(timeout(60.seconds)) {
+        val ws = plans.asScala.toSeq.map(_.executedPlan).filter(pgnScans(_).nonEmpty)
+        assert(ws.size == 2)
+        ws
+      }
+      staging.foreach { p =>
+        assert(pgnScans(p).size == 1, p.toString)
+        assert(Plans.collect(p) { case b: BroadcastExchangeExec => b }.isEmpty, p.toString)
+      }
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("a cold run reads the openings once and counts the publish without schema inference") {
+    val d = Files.createTempDirectory("chess_cold")
+    val reads = spark.sparkContext.longAccumulator("openings rows read")
+    val counted = udf { () => reads.add(1); true }.asNondeterministic()
+    val openings = spark.read.parquet(root.resolve("openings").toString).filter(counted())
+    val jobs = jobsDuring(ChessPipeline.run(spark, both(root), openings,
+      d.resolve("staging").toString, d.resolve("out").toString))
+    assert(reads.value == 3, "the 3 openings rows must be read by one collect")
+    // schema inference runs its job outside any query execution
+    assert(jobs.forall(_._2), jobs.mkString(", "))
+  }
+
+  test("a no-change re-run launches one job and broadcasts no trie") {
+    val d = Files.createTempDirectory("chess_noop")
+    val openings = spark.read.parquet(root.resolve("openings").toString)
+    def runIt() = ChessPipeline.run(spark, both(root), openings,
+      d.resolve("staging").toString, d.resolve("out").toString)
+    runIt()
+    var broadcasts = -1L
+    val jobs = jobsDuring { broadcasts = broadcastsDuring(runIt()) }
+    assert(jobs.size == 1, jobs.mkString(", "))
+    // exactly the broadcasts of that one job: the openings collect
+    assert(broadcasts ==
+      broadcastsDuring(OpeningEnrichment.dimension(openings).collect()))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.ops.{OpeningEnrichment, OpeningTrie}
 
 class OpeningEnrichmentSpec extends AnyFunSuite with SparkTestBase {
@@ -18,35 +18,75 @@ class OpeningEnrichmentSpec extends AnyFunSuite with SparkTestBase {
     ("A00b", "Dup Line Later", "1. b4", "b2b4")
   ).toDF("eco", "name", "pgn", "uci")
 
-  private lazy val games: DataFrame = Seq(
+  private val gameRows = Seq[(Long, String, String, String)](
     // (game_id, clean_movetext, ECO, Opening)
     (1L, "1. e4 e5 2. Nf3 Nc6 3. Bb5 a6 4. Ba4 Nf6", null, null),
     (2L, "1. e4 e5 2. Nf3 d6", null, null),
     (3L, "1. d4 d5 2. c4", null, null),
     (4L, "1. c4 e5", null, null),                       // no opening matches
     (5L, "1. e4 e5", "X99", "Already Labeled"),         // not a target (P4)
-    (6L, "1. b4 d5", null, null)                        // duplicate-pgn tie-break
-  ).toDF("game_id", "clean_movetext", "ECO", "Opening")
+    (6L, "1. b4 d5", null, null),                       // duplicate-pgn tie-break
+    (7L, null, "X7", null)                              // no movetext
+  )
 
-  private def check(out: DataFrame): Unit = {
-    val m = out.orderBy("game_id")
+  private lazy val games: DataFrame =
+    gameRows.toDF("game_id", "clean_movetext", "ECO", "Opening")
+
+  private lazy val noOpenings: DataFrame = openings.limit(0)
+
+  /** (game_id, ECO, Opening) of `out`, ordered by game_id. */
+  private def labels(out: DataFrame): Seq[(Long, String, String)] =
+    out.orderBy("game_id")
       .select("game_id", "ECO", "Opening")
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      .toSeq
+
+  /** Checks `form` over the openings and over an empty dimension. */
+  private def check(form: (DataFrame, DataFrame) => DataFrame): Unit = {
+    val m = labels(form(games, openings))
     assert(m(0) == ((1L, "C60", "Ruy Lopez")))          // longest match wins
     assert(m(1) == ((2L, "C40", "King's Knight Opening")))
     assert(m(2) == ((3L, "D00", "Queen's Pawn Game")))
     assert(m(3) == ((4L, null, null)))                  // unmatched unchanged
     assert(m(4) == ((5L, "X99", "Already Labeled")))    // non-target untouched
     assert(m(5) == ((6L, "A00b", "Dup Line Later")))    // (ply,eco,name)-max tie-break
+    assert(m(6) == ((7L, "X7", null)))                  // null movetext unchanged
+    assert(m.size == 7)
+    // an empty dimension labels nothing and changes no row
+    assert(labels(form(games, noOpenings)) ==
+      gameRows.map { case (id, _, eco, op) => (id, eco, op) })
+  }
+
+  /** `form` run on a MemoryStream of `gameRows` (the rows of `games`),
+    * drained into a memory table. */
+  private def streamed(form: (DataFrame, DataFrame) => DataFrame)(
+      g: DataFrame, o: DataFrame): DataFrame = {
+    implicit val sq = spark.sqlContext
+    val in = MemoryStream[(Long, String, String, String)]
+    val name = s"enriched_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val q = form(in.toDF().toDF(g.columns.toIndexedSeq: _*), o)
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    try {
+      in.addData(gameRows)
+      q.processAllAvailable()
+    } finally q.stop()
+    spark.table(name)
   }
 
   test("broadcast contains-join + argmax enrichment (parity form)") {
-    check(OpeningEnrichment.enrich(games, openings))
+    check(OpeningEnrichment.enrich)
   }
 
   test("trie enrichment (scale form) agrees with parity form") {
-    check(OpeningEnrichment.enrichTrie(games, openings))
+    // batch and stream meet the same expected labels as the parity form
+    check(OpeningEnrichment.enrichTrie)
+    check(streamed(OpeningEnrichment.enrichTrie))
+    // one trie walk per row: the optimized plan calls the lookup once (a
+    // repartition keeps the optimizer from folding the local rows)
+    val plan = OpeningEnrichment.enrichTrie(games.repartition(2), openings)
+      .queryExecution.optimizedPlan.toString
+    assert("UDF\\(".r.findAllMatchIn(plan).size == 1, plan)
   }
 
   test("trie boundary: opening must end at word boundary") {

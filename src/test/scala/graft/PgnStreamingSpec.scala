@@ -118,7 +118,6 @@ class PgnStreamingSpec extends AnyFunSuite with SparkTestBase {
 
   test("E2E live ingest: pgn stream -> trie enrichment -> PGN sink via foreachBatch") {
     import graft.ops.OpeningEnrichment
-    import graft.ops.OpeningEnrichment.GameLite
     val s = spark
     import s.implicits._
     val dir: Path = Files.createTempDirectory("pgn_e2e_in")
@@ -134,9 +133,8 @@ class PgnStreamingSpec extends AnyFunSuite with SparkTestBase {
       .select(col("game_id"),
         graft.functions.chess.movesNormalize(col("movetext")).as("clean_movetext"),
         col("ECO"), col("Opening"))
-      .as[GameLite]
-    val enriched = OpeningEnrichment.enrichStream(games, openings)
-    val q = enriched.toDF().writeStream
+    val enriched = OpeningEnrichment.enrichTrie(games, openings)
+    val q = enriched.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
         // micro-batch publish through the PGN sink (streaming form of the
         // export stage); movetext column required by the writer, and an
@@ -295,7 +293,7 @@ class PgnStreamingSpec extends AnyFunSuite with SparkTestBase {
         .withColumn("clean_timecontrol",
           graft.functions.chess.timecontrolNormalize(col("TimeControl")))
         .withColumn("DataSource", lit("src_r"))
-      OpeningEnrichment.enrichStreamRows(games, openings)
+      OpeningEnrichment.enrichTrie(games, openings)
         .writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, id: Long) =>

@@ -138,22 +138,22 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
   test("streaming opening enrichment labels games live (map-only, no state)") {
     import graft.ops.OpeningEnrichment
-    import graft.ops.OpeningEnrichment.GameLite
     implicit val sq = spark.sqlContext
     val openings = Seq(
       ("C20", "King's Pawn Game", "1. e4 e5", "e2e4 e7e5"),
       ("D00", "Queen's Pawn Game", "1. d4 d5", "d2d4 d7d5")).toDF("eco", "name", "pgn", "uci")
-    val in = MemoryStream[GameLite]
-    val q = OpeningEnrichment.enrichStream(in.toDS(), openings)
+    val in = MemoryStream[(Long, String, String, String)]
+    val games = in.toDF().toDF("game_id", "clean_movetext", "ECO", "Opening")
+    val q = OpeningEnrichment.enrichTrie(games, openings)
       .writeStream.format("memory").queryName("enriched_stream")
       .outputMode("append").start()
     try {
       in.addData(
-        GameLite(1, "1. e4 e5 2. Nf3", null, null),
-        GameLite(2, "1. c4 c5", null, null),
-        GameLite(3, "1. d4 d5", "X0", "Kept"))
+        (1L, "1. e4 e5 2. Nf3", null, null),
+        (2L, "1. c4 c5", null, null),
+        (3L, "1. d4 d5", "X0", "Kept"))
       q.processAllAvailable()
-      in.addData(GameLite(4, "1. d4 d5 2. c4", null, null))
+      in.addData((4L, "1. d4 d5 2. c4", null, null))
       q.processAllAvailable()
       val rows = spark.table("enriched_stream").collect()
         .map(r => (r.getAs[Long]("game_id"), r.getAs[String]("Opening"))).toMap
