@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, materializing full results through the `noop` sink
@@ -253,14 +252,7 @@ object Bench {
       .orElse(Some("/root/repo/localdata/sf1")))
       .filter(d => new java.io.File(d).isDirectory && d != sfDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.functions.chess.session("graft-bench", s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
     // cumulative executor task metrics; per-query values are deltas taken
     // after draining the (async) listener bus
@@ -283,7 +275,7 @@ object Bench {
     })
     // JVM/codegen warmup outside the timed region
     spark.range(1000000).selectExpr("sum(id)").collect()
-    val only = args.drop(1).headOption.map(_.split(",").toSet)
+    val only = args.lift(1)
     // post-query storage-memory snapshot (cached/checkpointed blocks, MB):
     // distinguishes "this query regressed" from "shared state got evicted
     // under memory pressure and a later query repaid it" when a re-run
@@ -292,12 +284,7 @@ object Bench {
       spark.sparkContext.getRDDStorageInfo
         .map(i => i.memSize + i.diskSize).sum >> 20
     def runSuite(dir: String): Seq[QRow] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        // a selector matches its exact short key ("q17" must not also
-        // select q170–q174) or the full query name
-        .filter { case (n, _) =>
-          only.forall(s => s.contains(n.takeWhile(_ != '_')) || s.contains(n)) }
-        .map { case (name, fn) =>
+      SparkEntry.select(only).map { case GateQuery(name, fn, _) =>
         org.apache.spark.graft.ListenerBusBridge.drain(spark.sparkContext)
         val task0 = taskMsTotal.get(); val gc0 = gcMsTotal.get()
         val sh0 = shuffleBytesTotal.get()

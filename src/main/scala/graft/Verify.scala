@@ -1,16 +1,32 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry gate query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare (`tools/crosscheck.py`). */
 object Verify {
+  /** The `oracle_sql.json` body: one `name: sql` member per entry.
+    * JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    * — a tab or CR in an entry's SQL would otherwise make the reader's
+    * json.load fail and silently zero every oracle comparison.
+    */
+  def oracleJson(entries: Seq[GateQuery]): String = {
+    def q(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    entries.map(g => s"${q(g.name)}: ${q(g.oracleSql)}").mkString("{", ",", "}")
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional 3rd arg (builder-local iteration only; the driver passes 2):
-    // comma-separated query names — dump and emit oracle SQL for just those
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(',').toSet) else None
-    def wanted(name: String): Boolean = only.forall(_.contains(name))
+    // optional 3rd arg (for iteration; the full gate passes 2): a
+    // SparkEntry.select list — dump and emit oracle SQL for just those
+    val entries = SparkEntry.select(args.lift(2))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -21,30 +37,14 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (!wanted(name)) ()
-      else try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    entries.foreach { g =>
+      try g.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${g.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${g.name} failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => wanted(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(entries))
     spark.stop()
   }
 }

@@ -663,9 +663,10 @@ object GraphOps {
     * floored at the historical 72 so the gate never loosens. The budget
     * gate exists to prevent an OOM, so it must hold at EVERY n on THIS
     * JVM — GraphOpsSpec re-measures real maps across capacity
-    * boundaries against the derived value.
+    * boundaries against the derived value. Lazy: only the LPA broadcast
+    * gate pays for the probe, not every reader of this object.
     */
-  val LpaBytesPerNode: Long = {
+  lazy val LpaBytesPerNode: Long = {
     val n = (1 << 13) + 1 // just past a boundary: capacity/entries ≈ 4
     val probe = buildLabelMap(
       Array.tabulate(n)(i => (i.toLong, (i % 97).toLong)))

@@ -536,8 +536,9 @@ object ScaleOps {
     * NAIVE partition-less running sum (`sum(cents).over(Window.orderBy
     * (o_orderkey))`, the exact plan q51/q172 exist to avoid), and the
     * [[graft.functions.AutoRangeCumSum]] optimizer rule — injected via
-    * GraftExtensions, enabled by the session conf it keys on — rewrites
-    * it into the proven [[rangedCumSum]] plan during optimization. The
+    * GraftExtensions, enabled by the session conf it keys on, which this
+    * builder sets only while it optimizes its own plan — rewrites it into
+    * the proven [[rangedCumSum]] plan during optimization. The
     * oracle replays the window form, so the hash match proves the
     * OPTIMIZER-produced plan row-identical to the naive semantics; the
     * suite-wide PlanSpec assertion (no gate query plans a partition-less
@@ -555,15 +556,24 @@ object ScaleOps {
     */
   def autorangeCumSum(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    spark.conf.set(graft.functions.AutoRangeCumSum.BucketKey,
-      AutoRangeBucket.toString)
+    import graft.functions.AutoRangeCumSum.BucketKey
     val w = Window.orderBy(col("o_orderkey"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    graft.Tables.orders(spark, sfDir)
+    val naive = graft.Tables.orders(spark, sfDir)
       .select(col("o_orderkey"),
         floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
       .withColumn("cum_cents", sum(col("cents")).over(w))
       .select(col("o_orderkey"), col("cents"), col("cum_cents"))
+    // the rule is enabled only while this plan is optimized: the session
+    // conf is restored before returning, so no later query is rewritten.
+    // The returned frame wraps the already-rewritten plan (the rule
+    // no-ops on it when it runs again).
+    val prev = spark.conf.getOption(BucketKey)
+    spark.conf.set(BucketKey, AutoRangeBucket.toString)
+    val rewritten =
+      try naive.queryExecution.optimizedPlan
+      finally prev.fold(spark.conf.unset(BucketKey))(spark.conf.set(BucketKey, _))
+    org.apache.spark.sql.graft.PlanBridge.ofRows(spark, rewritten)
   }
 
   val autorangeCumSumSql: String =

@@ -31,6 +31,7 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.tools.InvarianceCheck <sfDir> <outJson>
   *          [cpusA,shuffleA[,aqe][,key=val…]] [cpusB,…] [q1,q2,…]
+  * The query list is a `SparkEntry.select` list (short keys or names).
   * Config args are split on UNESCAPED commas before key=val extraction;
   * a conf VALUE containing a comma (a list-valued conf) is written with
   * `\,` (shell-quoted), e.g. `32,32,true,spark.foo=a\,b`.
@@ -112,10 +113,9 @@ object InvarianceCheck {
   }
 
   private def runAll(spark: SparkSession, sfDir: String,
-      only: Option[Set[String]]): Map[String, Either[String, Fp]] =
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
+      only: Option[String]): Map[String, Either[String, Fp]] =
+    graft.SparkEntry.select(only)
+      .map { case graft.GateQuery(name, fn, _) =>
         name -> (try Right(timedFingerprint(fn(spark, sfDir)))
         catch { case e: Throwable =>
           System.err.println(s"[invariance] $name failed: ${e.getMessage}")
@@ -138,8 +138,7 @@ object InvarianceCheck {
       args.lift(i).map(parseCfg).getOrElse(dflt)
     val (cpusA, shA, aqeA, extraA) = cfg(2, (32, 32, true, Seq.empty))
     val (cpusB, shB, aqeB, extraB) = cfg(3, (5, 7, true, Seq.empty))
-    val only: Option[Set[String]] =
-      if (args.length > 4) Some(args(4).split(',').toSet) else None
+    val only = args.lift(4)
 
     val sA = session(cpusA, shA, aqeA, extraA)
     val a = runAll(sA, sfDir, only)

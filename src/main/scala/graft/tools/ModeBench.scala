@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
 import graft.ops.{Ndv, Quantiles}
@@ -43,15 +42,8 @@ object ModeBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/localdata/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.functions.chess.session("graft-modebench",
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
     spark.sparkContext.setLogLevel("WARN")
 
     val shuffleBytes = new AtomicLong(0L)

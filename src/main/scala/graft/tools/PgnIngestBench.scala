@@ -3,7 +3,6 @@ package graft.tools
 import java.io.{BufferedWriter, FileWriter}
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** PGN ingest at the reference's real file scale (r9, VERDICT item 5):
@@ -93,15 +92,8 @@ object PgnIngestBench {
     }
     val len = Files.size(Paths.get(file))
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.functions.chess.session("graft-pgn-ingest-bench",
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
 

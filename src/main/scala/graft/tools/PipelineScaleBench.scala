@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ops.PgnDemo
 import graft.pipeline.ChessPipeline
 
@@ -73,15 +71,8 @@ object PipelineScaleBench {
       Files.size(Paths.get(inRoot, k, "games.pgn"))
     }.sum
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.functions.chess.session("graft-pipeline-scale-bench",
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
 

@@ -679,16 +679,23 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       case r: RepartitionOperation => bounded(r.child)
       case _ => false
     }
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        // q223's builder turns the AutoRangeCumSum rewrite ON and the
-        // session conf persists — unset it before every OTHER query's
-        // plan so the rule cannot silently repair a regression here
-        // (q223 is the ONE query allowed to rely on it: its own builder
-        // re-sets the conf, and its oracle proves the rewrite)
-        if (name != "q223_autorange_cumsum")
-          spark.conf.unset(graft.functions.AutoRangeCumSum.BucketKey)
+    // the AutoRangeCumSum rewrite must be off here, so the rule cannot
+    // silently repair a regression (q223 is the ONE query allowed to rely
+    // on it: its builder enables it for its own plan only, and its oracle
+    // proves the rewrite)
+    assert(spark.conf.getOption(graft.functions.AutoRangeCumSum.BucketKey).isEmpty)
+    val confChanges = scala.collection.mutable.ArrayBuffer.empty[String]
+    val offenders = SparkEntry.registry.flatMap {
+      case GateQuery(name, fn, _) =>
+        // building a plan has no side effects on the session conf. The one
+        // allowed key is Tables.NanosFlag: a read-time flag the `events`
+        // scan needs when the query executes, so its builder must set it.
+        val before = spark.conf.getAll
         val plan = fn(spark, sf).queryExecution.optimizedPlan
+        val after = spark.conf.getAll
+        confChanges ++= (before.keySet ++ after.keySet)
+          .filter(k => k != Tables.NanosFlag && before.get(k) != after.get(k))
+          .map(k => s"$name: $k ${before.get(k)} -> ${after.get(k)}")
         val globals = plan.collect {
           case w: Window if w.partitionSpec.isEmpty =>
             s"window: ${w.windowExpressions}"
@@ -707,7 +714,8 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
         }
         (globals ++ cartesians).map(o => s"$name: $o")
     }
-    spark.conf.unset(graft.functions.AutoRangeCumSum.BucketKey)
+    assert(confChanges.isEmpty,
+      s"gate query builds changed the session conf:\n${confChanges.mkString("\n")}")
     assert(offenders.isEmpty,
       s"scale-killer shapes in gate plans:\n${offenders.mkString("\n")}")
   }
