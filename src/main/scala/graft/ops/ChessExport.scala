@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
+import graft.sources.ForkFreeLocalFs
+
 /** Per-source publish (SURVEY.md §2 S7-S9, P2, P5, F6-F8; reference:
   * src/export-to-parquet.ts:40-112).
   *
@@ -33,7 +35,10 @@ import org.apache.spark.sql.functions._
   * per Hive cell at this scale and O(cells) files at 100 TB, while letting
   * AQE split a mega source-month cell across tasks instead of serializing
   * it into one straggler, with a per-file record cap as the AQE-independent
-  * bound.
+  * bound. A publish's cost is per cell, not per byte: every cell is a
+  * directory, a data file and its `.crc`, each given its mode by Hadoop.
+  * Stock `file:` forks a `chmod` for each (~3.7 ms); the write and the
+  * swap's file system go through [[ForkFreeLocalFs]] instead.
   */
 object ChessExport {
 
@@ -68,7 +73,7 @@ object ChessExport {
   def publish(games: DataFrame, key: String, outDir: String): Boolean = {
     val cell = sourceDir(key)
     val temp = new HPath(new HPath(outDir, TempDir), cell)
-    val fs = temp.getFileSystem(games.sparkSession.sessionState.newHadoopConf())
+    val fs = temp.getFileSystem(ForkFreeLocalFs.hadoopConf(games.sparkSession))
     PartitionedSink.write(exportProjection(games),
       Seq("DataSource", "year", "month"), temp.toString)
     val fresh = new HPath(temp, cell)
@@ -85,7 +90,7 @@ object ChessExport {
     * `keys`, and the temp dir [[publish]] leaves behind. */
   def retain(spark: SparkSession, keys: Seq[String], outDir: String): Unit = {
     val out = new HPath(outDir)
-    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = out.getFileSystem(ForkFreeLocalFs.hadoopConf(spark))
     // a glob under a missing dir matches nothing
     val kept = keys.map(sourceDir).toSet
     fs.globStatus(new HPath(out, "DataSource=*")).map(_.getPath)

@@ -106,22 +106,35 @@ object OpeningEnrichment {
 
 /** Character trie over opening `pgn` lines. `longestMatch` walks the
   * normalized movetext once, remembering the deepest terminal whose match
-  * ends at a word boundary; terminal payloads carry the (ply,eco,name)-max
-  * winner when two openings share an identical pgn line.
+  * ends at a word boundary; when two openings share an identical pgn line,
+  * the (ply,eco,name)-max one wins.
+  *
+  * The trie holds only the winning rows (~280 KB serialized for the full
+  * openings table). The node graph (~6 MB as Java serialization) is a
+  * transient lazy val built on the first lookup, so a broadcast neither
+  * serializes it nor walks it for its size estimate; each JVM that looks
+  * up builds it once (13–44 ms for the full table).
   */
-final class OpeningTrie extends Serializable {
-  private val root = new OpeningTrie.Node
+final class OpeningTrie private (
+    // a field, not a bare parameter: scalac may null a private field that
+    // only a lazy val's initializer reads once that lazy val is set (it
+    // does when the companion forces `root`), and the trie would then
+    // serialize empty
+    private[ops] val rows: Array[(String, Int, String, String)])
+    extends Serializable {
 
-  def insert(pgn: String, ply: Int, eco: String, name: String): Unit = {
-    var node = root
-    var i = 0
-    while (i < pgn.length) {
-      node = node.children.getOrElseUpdate(pgn.charAt(i), new OpeningTrie.Node)
-      i += 1
+  @transient private lazy val root: OpeningTrie.Node = {
+    val root = new OpeningTrie.Node
+    rows.foreach { case (pgn, ply, eco, name) =>
+      var node = root
+      var i = 0
+      while (i < pgn.length) {
+        node = node.children.getOrElseUpdate(pgn.charAt(i), new OpeningTrie.Node)
+        i += 1
+      }
+      node.terminal = (ply, eco, name)
     }
-    // deterministic tie-break on duplicate pgn lines: (ply, eco, name) max
-    val cand = (ply, eco, name)
-    if (node.terminal == null || OpeningTrie.gt(cand, node.terminal)) node.terminal = cand
+    root
   }
 
   /** Longest opening whose pgn is a prefix of `movetext` ending at a word
@@ -147,7 +160,7 @@ final class OpeningTrie extends Serializable {
 }
 
 object OpeningTrie {
-  private[ops] final class Node extends Serializable {
+  private final class Node {
     val children = new scala.collection.mutable.HashMap[Char, Node]
     var terminal: (Int, String, String) = _
   }
@@ -155,9 +168,11 @@ object OpeningTrie {
   private def gt(a: (Int, String, String), b: (Int, String, String)): Boolean =
     Ordering.Tuple3[Int, String, String].gt(a, b)
 
+  /** A trie over `(pgn, ply, eco, name)` rows. */
   def build(rows: Seq[(String, Int, String, String)]): OpeningTrie = {
-    val t = new OpeningTrie
-    rows.foreach { case (pgn, ply, eco, name) => t.insert(pgn, ply, eco, name) }
-    t
+    val winners = rows.groupMapReduce(_._1)(r => (r._2, r._3, r._4))(
+      (a, b) => if (gt(b, a)) b else a)
+    new OpeningTrie(winners.iterator
+      .map { case (pgn, (ply, eco, name)) => (pgn, ply, eco, name) }.toArray)
   }
 }

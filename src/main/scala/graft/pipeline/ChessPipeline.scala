@@ -15,6 +15,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.chess
 import graft.ops.{ChessExport, OpeningEnrichment, OpeningTrie}
+import graft.sources.ForkFreeLocalFs
 
 /** The whole-pipeline driver — Spark-native analog of the reference's DVC DAG
   * (SURVEY.md §3 E1-E3): per source `ingest → normalize → enrich → stage`,
@@ -116,7 +117,7 @@ object ChessPipeline {
     // the qualified outDir: staging reused against another outDir must
     // republish there
     val out = new HPath(outDir)
-    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = out.getFileSystem(ForkFreeLocalFs.hadoopConf(spark))
     val root = fs.makeQualified(out)
     val manifests = sorted.map { s =>
       s -> Seq(ManifestFormat, root, inputManifest(s.pgnDir), openingsFp).mkString("\n")
@@ -149,7 +150,8 @@ object ChessPipeline {
         val enriched = ingestAndEnrich(spark, src, trie)
         enriched.observe(obs, count(lit(1)).as("games"),
             count(col("parse_error")).as("parse_errors"))
-          .write.mode(SaveMode.Overwrite).parquet(stage(src))
+          .write.mode(SaveMode.Overwrite).options(ForkFreeLocalFs.options)
+          .parquet(stage(src))
         // the known schema spares a schema-inference job
         val staged = spark.read.schema(enriched.schema).parquet(stage(src))
         val published = ChessExport.publish(staged, src.key, outDir)

@@ -5,6 +5,7 @@ import java.util
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
@@ -59,34 +60,27 @@ class PgnDataSource extends TableProvider with DataSourceRegister {
   * options must see the same files).
   */
 object PgnFiles {
-  /** `paths` (JSON array from multi-path load) takes precedence over `path`. */
+  /** `paths` (the JSON array a multi-path load passes) takes precedence
+    * over `path`. */
   def paths(options: Map[String, String]): Seq[String] =
-    options.get("paths").map { json =>
-      json.stripPrefix("[").stripSuffix("]")
-        .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
-        .filter(_.nonEmpty)
-    }.getOrElse(options.get("path").toSeq)
+    options.get("paths")
+      .map(json => new ObjectMapper().readValue(json, classOf[Array[String]]).toSeq)
+      .getOrElse(options.get("path").toSeq)
 
-  /** Recursive .pgn discovery (globs + directories), sorted by path. */
-  def list(paths: Seq[String], conf: Configuration): Seq[(String, Long)] = {
-    val files = ArrayBuffer.empty[(String, Long)]
-    paths.foreach { p =>
+  /** Recursive .pgn discovery (globs + directories), sorted by path. The
+    * walk lists with `listStatus` ([[ForkFreeLocalFs.walkFiles]]), so no
+    * file's permissions are loaded: on `file:` that would fork `ls -ld`
+    * once per file, on every scan plan and every micro-batch poll.
+    */
+  def list(paths: Seq[String], conf: Configuration): Seq[(String, Long)] =
+    paths.flatMap { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
-      val statuses = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
-      statuses.foreach { st =>
-        if (st.isDirectory) {
-          val it = fs.listFiles(st.getPath, true)
-          while (it.hasNext) {
-            val f = it.next()
-            if (f.getPath.getName.toLowerCase.endsWith(".pgn"))
-              files += ((f.getPath.toString, f.getLen))
-          }
-        } else files += ((st.getPath.toString, st.getLen))
-      }
-    }
-    files.sortBy(_._1).toSeq
-  }
+      Option(fs.globStatus(path)).toSeq.flatten.flatMap { st =>
+        if (!st.isDirectory) Seq(st)
+        else ForkFreeLocalFs.walkFiles(fs, st.getPath)(_.toLowerCase.endsWith(".pgn"))
+      }.map(f => (f.getPath.toString, f.getLen))
+    }.sortBy(_._1)
 
   /** Byte-range splits for one file — the SHARED planner of the batch scan
     * and the micro-batch stream (r9: a 1.43 GB monthly drop previously

@@ -149,11 +149,11 @@ object PipelineScaleBench {
         else {
           val committed = graft.streaming.StreamingPublish.committedBatches(outS)
           val tagged = "^b(\\d+)-part-.*".r
-          val committedFiles = graft.streaming.StreamingPublish
+          val committedFiles = graft.sources.ForkFreeLocalFs
             .walkFiles(outFs, outFs.makeQualified(outPath)) {
               case tagged(id) => committed.contains(id.toLong)
               case _          => false
-            }.map(_.toString)
+            }.map(_.getPath.toString)
           if (committedFiles.isEmpty) 0L
           else spark.read.parquet(committedFiles: _*).count()
         }

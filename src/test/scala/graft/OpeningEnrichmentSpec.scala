@@ -98,6 +98,30 @@ class OpeningEnrichmentSpec extends AnyFunSuite with SparkTestBase {
     assert(t.longestMatch(null).isEmpty)
   }
 
+  test("trie serializes as its flat rows and matches the same after a round trip") {
+    import java.io._
+    val lines = (1 to 90).map(i => (1 to 8).map(j => s"$j. m${(i * j) % 97}").mkString(" "))
+    val rows = lines.zipWithIndex.map { case (l, i) => (l, 8, f"A$i%02d", s"line $i") } ++
+      Seq(("1. e4", 1, "B00", "KP"), ("1. e4 e5", 2, "C20", "KP Game"),
+        ("1. e4 e5", 2, "C20", "Another"))
+    val t = OpeningTrie.build(rows)
+    val probes = lines.map(_ + " 9. h4") ++
+      Seq("1. e4 e5 2. Nf3", "1. e4 c5", "1. e4", "1. d4 d5", null)
+    // looked up before serializing, so the node graph exists at that point
+    val expected = probes.map(t.longestMatch)
+    val buf = new ByteArrayOutputStream()
+    val out = new ObjectOutputStream(buf)
+    out.writeObject(t)
+    out.close()
+    // the node graph stays out of the serialized form
+    assert(buf.size < 4 * rows.map(r => r._1.length + r._3.length + r._4.length).sum)
+    val back = new ObjectInputStream(new ByteArrayInputStream(buf.toByteArray))
+      .readObject().asInstanceOf[OpeningTrie]
+    assert(probes.map(back.longestMatch) == expected)
+    assert(back.longestMatch("1. e4 e5 2. Nf3").contains(("C20", "KP Game")))
+    assert(back.longestMatch(lines(7)).contains(("A07", "line 7")))
+  }
+
   test("enrichment plan broadcasts the openings side (no fact shuffle)") {
     val plan = OpeningEnrichment.enrich(games, openings)
       .queryExecution.executedPlan.toString

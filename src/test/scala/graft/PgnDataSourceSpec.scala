@@ -169,4 +169,41 @@ class PgnDataSourceSpec extends AnyFunSuite with SparkTestBase {
         |WHERE Event = 'Game A2'""".stripMargin).head()
     assert(row.getString(0) == "1. d4 d5")
   }
+
+  test("multi-path load: a comma or quote in a dir name, same files and game_ids as per-dir loads") {
+    import graft.sources.PgnFiles
+    val root = Files.createTempDirectory("pgn_multi")
+    val dirs = Seq("a,b", "q\"x").map(n => Files.createDirectory(root.resolve(n)))
+    def games(events: String*) = events.map(e =>
+      s"[Event \"$e\"]\n[Result \"1-0\"]\n\n1. e4 e5 1-0\n").mkString("\n")
+    writePgn(dirs(0), "2.pgn", games("A2a", "A2b"))
+    writePgn(dirs(0), "1.pgn", games("A1"))
+    Files.createDirectory(dirs(0).resolve("sub"))
+    writePgn(dirs(0).resolve("sub"), "3.PGN", games("A3"))
+    writePgn(dirs(0), "notes.txt", "not a game")
+    writePgn(dirs(1), "x.pgn", games("Q1a", "Q1b"))
+    val paths = dirs.map(_.toString)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(paths.toArray)
+    assert(PgnFiles.paths(Map("paths" -> json)) == paths)
+
+    val conf = spark.sparkContext.hadoopConfiguration
+    val perDir = paths.map(p => PgnFiles.list(Seq(p), conf).map(_._1))
+    val all = PgnFiles.list(paths, conf).map(_._1)
+    assert(all == perDir.flatten.sorted)
+    assert(all.size == 4 && all.forall(_.toLowerCase.endsWith(".pgn")))
+
+    // a per-dir game_id rebased onto the combined file order
+    val offset = (1L << 40) - 1
+    val expected = paths.zip(perDir).flatMap { case (p, files) =>
+      spark.read.format("pgn").load(p).select("Event", "game_id").collect().map { r =>
+        val id = r.getLong(1)
+        r.getString(0) -> ((all.indexOf(files((id >> 40).toInt)).toLong << 40) | (id & offset))
+      }
+    }.sorted
+    val multi = spark.read.format("pgn").load(paths: _*).select("Event", "game_id")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sorted
+    assert(multi == expected)
+    assert(multi.map(_._1) == Seq("A1", "A2a", "A2b", "A3", "Q1a", "Q1b"))
+  }
 }
