@@ -31,6 +31,17 @@ import graft.sources.ForkFreeLocalFs
   * LayoutSpec proves both halves on a deliberately skewed corpus: every
   * written file respects the cap while total file count stays O(cells).
   *
+  *  - **Small writes run in few tasks**: AQE coalesces the REBALANCE
+  *    shuffle to partitions of at least
+  *    `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MiB),
+  *    so a write whose shuffle is below `cores` MiB runs in
+  *    ⌈shuffleBytes / 1 MiB⌉ tasks and leaves the other cores idle (the
+  *    4-source lakebench catch-up: ~2 MB of shuffle, 2 tasks on 4 cores).
+  *    A per-shuffle advisory size does not lift that floor — Spark's
+  *    coalescing takes the larger of the target and the minimum — so
+  *    filling the cores would take a session-wide AQE setting, or giving
+  *    up REBALANCE's split of one very large cell. Neither is done here.
+  *
   *  - **Per-cell cost**: each published cell creates a month directory,
   *    a `part-*` file and its `.crc` sidecar, and stock `file:` spends a
   *    forked `chmod` (~3.7 ms wall) on each. The write therefore carries

@@ -2,13 +2,14 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, TimeUnit}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -60,9 +61,9 @@ object ChessPipeline {
       normalize(spark.read.format("pgn").load(source.pgnDir), source.key), trie)
 
   /** Bounded source-stage concurrency. The per-source DAGs (scan →
-    * normalize → enrich → staging write) are independent, and one
-    * source's scan rarely has enough input splits to fill a cluster (the
-    * 14.31 GB / 24-source measurement: serial staging kept ~2.4 of 32
+    * normalize → enrich → staging write → publish) are independent, and
+    * one source's scan rarely has enough input splits to fill a cluster
+    * (the 14.31 GB / 24-source measurement: serial staging kept ~2.4 of 32
     * cores busy — 15 MB/s aggregate over a corpus that scans at
     * ~150 MB/s). Submitting a bounded window of them concurrently lets
     * the scheduler fill executors with splits from several sources at
@@ -70,25 +71,28 @@ object ChessPipeline {
     * cluster. Bounded (not all-at-once) so a 1000-source corpus doesn't
     * hold 1000 write jobs' memory at the driver.
     *
-    * The window is DERIVED from the cluster shape (r11), overridable via
-    * [[SourceConcurrencyKey]]: `clamp(cores / 2, 2, 16)`. Rationale: one
-    * source keeps ~2–3 cores busy at reference file sizes, so even
-    * cores/4 sources nominally saturate — but the measured width sweep
-    * on the 32-core box (14.31 GB / 24 sources, BASELINE.md r11) shows
-    * the deeper window still wins: 2 → 420 s, 8 → 175–176 s,
-    * 16 → 161–164 s (reproduced), because per-source stages have
-    * scheduling gaps (manifest checks, commit barriers, small-source
-    * tails) that a deeper backlog fills. The floor of 2 preserves
-    * overlap on tiny boxes; the cap of 16 bounds driver-side job
-    * bookkeeping however wide the cluster.
+    * The window is DERIVED from the cluster shape, overridable via
+    * [[SourceConcurrencyKey]]: `clamp(cores, 2, 16)` ([[windowFor]]).
+    * One window slot per core: a source's stage is a chain of short jobs
+    * with driver-side gaps between them (manifest checks, commit
+    * barriers, a publish that waits on its staging write), and a small
+    * source's jobs run one task each, so fewer sources than cores leave
+    * cores idle (a window of `cores / 2` kept a 4-core box about half
+    * idle through a 4-source ingest). The width sweep on the 32-core box
+    * (14.31 GB / 24 sources, BASELINE.md r11) showed the same pull
+    * toward deeper windows: 2 → 420 s, 8 → 175–176 s, 16 → 161–164 s.
+    * The floor of 2 preserves overlap on tiny boxes; the cap of 16 bounds
+    * driver-side job bookkeeping however wide the cluster (the 32-core
+    * box keeps its measured 16).
     */
   val SourceConcurrencyKey = "graft.pipeline.sourceConcurrency"
 
   def sourceConcurrency(spark: SparkSession): Int =
-    spark.conf.getOption(SourceConcurrencyKey).map(_.toInt).getOrElse {
-      val cores = spark.sparkContext.defaultParallelism
-      math.min(16, math.max(2, cores / 2))
-    }
+    spark.conf.getOption(SourceConcurrencyKey).map(_.toInt)
+      .getOrElse(windowFor(spark.sparkContext.defaultParallelism))
+
+  /** The derived window on `cores` cores: `clamp(cores, 2, 16)`. */
+  def windowFor(cores: Int): Int = math.min(16, math.max(2, cores))
 
   /** Full run. `stagingDir` holds per-source enriched parquet + manifests;
     * `outDir` gets the partitioned publish, one `DataSource=<key>` subtree
@@ -113,7 +117,6 @@ object ChessPipeline {
     // and then once for all of them.
     val dim = OpeningEnrichment.dimension(openings).collect().toIndexedSeq
     val openingsFp = sha256(dim.map(r => (0 until 4).map(r.get(_)).mkString("\u0001")).sorted)
-    lazy val trie = OpeningEnrichment.broadcastTrie(spark, dim)
     // the qualified outDir: staging reused against another outDir must
     // republish there
     val out = new HPath(outDir)
@@ -129,11 +132,14 @@ object ChessPipeline {
       val published = fs.exists(new HPath(out, ChessExport.sourceDir(s.key)))
       readManifest(stage(s)).contains(manifest(s, published))
     }
+    val trie = if (stale.isEmpty) None else Some(OpeningEnrichment.broadcastTrie(spark, dim))
     // stage and publish sources in a bounded-concurrency window; each
     // closure runs independent Spark jobs (the scheduler interleaves their
-    // tasks). Validation markdown is RETURNED and printed in source order
-    // below — concurrent stages must not interleave their report lines.
+    // tasks), named after their stage and source. Validation markdown is
+    // RETURNED and printed in source order below — concurrent stages must
+    // not interleave their report lines.
     import spark.implicits._
+    val sc = spark.sparkContext
     val pool = Executors.newFixedThreadPool(
       math.max(1, math.min(sourceConcurrency(spark), stale.size)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -147,40 +153,65 @@ object ChessPipeline {
         // are observed on the staging write; the rows are read back only
         // when there are any.
         val obs = Observation()
-        val enriched = ingestAndEnrich(spark, src, trie)
-        enriched.observe(obs, count(lit(1)).as("games"),
-            count(col("parse_error")).as("parse_errors"))
-          .write.mode(SaveMode.Overwrite).options(ForkFreeLocalFs.options)
-          .parquet(stage(src))
+        val enriched = ingestAndEnrich(spark, src, trie.get)
+        named(sc, s"stage ${src.key}") {
+          enriched.observe(obs, count(lit(1)).as("games"),
+              count(col("parse_error")).as("parse_errors"))
+            .write.mode(SaveMode.Overwrite).options(ForkFreeLocalFs.options)
+            .parquet(stage(src))
+        }
         // the known schema spares a schema-inference job
         val staged = spark.read.schema(enriched.schema).parquet(stage(src))
-        val published = ChessExport.publish(staged, src.key, outDir)
+        val published = named(sc, s"publish ${src.key}") {
+          ChessExport.publish(staged, src.key, outDir)
+        }
         // only after the swap: a run that dies before it leaves no
         // manifest, so the next run restages this source
         writeManifest(stage(src), manifest(src, published))
         val counts = obs.get.view.mapValues(_.asInstanceOf[Long])
         val bad = staged.filter(col("parse_error").isNotNull)
           .select(col("game_id"), col("Event"), col("parse_error"))
-        Seq(
-          s"[pipeline] ${src.key}:",
-          Markdown.render(Seq(counts("games")).toDF("games")),
-          Markdown.render(Seq(counts("parse_errors")).toDF("parse_errors")),
-          Markdown.render(if (counts("parse_errors") > 0) bad else bad.limit(0),
-            maxRows = 20)
-        ).mkString("\n")
+        named(sc, s"validate ${src.key}") {
+          Seq(
+            s"[pipeline] ${src.key}:",
+            Markdown.render(Seq(counts("games")).toDF("games")),
+            Markdown.render(Seq(counts("parse_errors")).toDF("parse_errors")),
+            Markdown.render(if (counts("parse_errors") > 0) bad else bad.limit(0),
+              maxRows = 20)
+          ).mkString("\n")
+        }
       }
     }
     try reports.foreach(r => println(Await.result(r, Duration.Inf)))
-    finally pool.shutdown()
+    finally {
+      // every source future has completed, on success or failure, before
+      // the run's trie broadcast is released from the driver and executors
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      trie.foreach(_.destroy())
+    }
     ChessExport.retain(spark, sorted.map(_.key), outDir)
     if (stale.nonEmpty) {
       // combined-count validation (export-to-parquet.ts:102-104)
       println("[pipeline] published:")
       // the partition column as the schema spares a schema-inference job
-      println(Markdown.render(spark.read.schema("DataSource STRING").parquet(outDir)
-        .agg(count(lit(1)).as("games"))))
+      println(named(sc, "published") {
+        Markdown.render(spark.read.schema("DataSource STRING").parquet(outDir)
+          .agg(count(lit(1)).as("games")))
+      })
     }
     println(s"[pipeline] → $outDir")
+  }
+
+  /** Runs `body` with the Spark jobs it launches named `site`, then
+    * restores the thread's call site. Local properties reach the threads
+    * AQE launches stage jobs from, so those jobs carry the name too
+    * instead of a `CompletableFuture` frame of their own thread.
+    */
+  private def named[T](sc: SparkContext, site: String)(body: => T): T = {
+    val saved = Seq("callSite.short", "callSite.long").map(k => k -> sc.getLocalProperty(k))
+    sc.setCallSite(site)
+    try body finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
   // --- manifest (DVC-hash analog) ---

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, InputStream}
+import java.io.InputStream
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 
@@ -8,6 +8,8 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.util.LineReader
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
@@ -42,7 +44,7 @@ class PgnPartitionReader(
       stream.seek(part.start - 1)
       startIsLineStart = stream.read() == '\n'
     }
-    new BufferedInputStream(stream, 1 << 16)
+    stream
   }
   private val lines = new OffsetLineIterator(in, part.start)
 
@@ -222,32 +224,28 @@ class PgnPartitionReader(
 }
 
 /** Line iterator over an InputStream that tracks the byte offset of each
-  * line start (`nextOffset` before calling `next()`). UTF-8; handles \n and
-  * \r\n. The stream is assumed positioned at `startOffset`.
+  * line start (`nextOffset` before calling `next()`). UTF-8; a line ends at
+  * '\n' and a '\r' before it is dropped (a lone '\r' ends no line). The
+  * stream is assumed positioned at `startOffset`; Hadoop's `LineReader`
+  * reads it in 64 KiB blocks and reports the bytes each line consumed.
   */
 class OffsetLineIterator(in: InputStream, startOffset: Long) extends Iterator[String] {
+  private val reader = new LineReader(in, 1 << 16, Array('\n'.toByte))
+  private val text = new Text()
   private var pos = startOffset
   private var lineStart = startOffset
   private var nextLine: String = _
-  private var eof = false
-
-  private val bytes = new ArrayBuffer[Byte](256)
 
   private def readOne(): Unit = {
-    if (eof) { nextLine = null; return }
-    bytes.clear()
     lineStart = pos
-    var b = in.read()
-    if (b < 0) { eof = true; nextLine = null; return }
-    while (b >= 0 && b != '\n') {
-      bytes += b.toByte
-      pos += 1
-      b = in.read()
+    val consumed = reader.readLine(text)
+    pos += consumed
+    nextLine = if (consumed == 0) null else {
+      val bytes = text.getBytes
+      var n = text.getLength
+      if (n > 0 && bytes(n - 1) == '\r') n -= 1
+      new String(bytes, 0, n, java.nio.charset.StandardCharsets.UTF_8)
     }
-    if (b == '\n') pos += 1 else eof = true
-    var n = bytes.length
-    if (n > 0 && bytes(n - 1) == '\r') n -= 1
-    nextLine = new String(bytes.toArray, 0, n, java.nio.charset.StandardCharsets.UTF_8)
   }
 
   readOne()

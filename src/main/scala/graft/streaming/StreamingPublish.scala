@@ -314,14 +314,16 @@ object StreamingPublish {
 
   /** Move every staged data file into its final cell under a
     * batchId-tagged name, deleting the batch's orphans from a previous
-    * crashed attempt in each touched cell first.
+    * crashed attempt in each touched cell first. Returns the number of
+    * files moved.
     */
   private def promoteStaged(fs: FileSystem, stage: HPath, outDir: HPath,
-      batchId: Long, copyFallback: Boolean): Unit = {
+      batchId: Long, copyFallback: Boolean): Int = {
     val tag = s"b$batchId-"
     val stagePrefix = fs.makeQualified(stage).toUri.getPath
     val cleaned = scala.collection.mutable.Set.empty[String]
-    dataFiles(fs, stage).foreach { p =>
+    val staged = dataFiles(fs, stage)
+    staged.foreach { p =>
       val full = p.toUri.getPath
       require(full.startsWith(stagePrefix + "/"),
         s"staged file $full escapes $stagePrefix")
@@ -360,11 +362,16 @@ object StreamingPublish {
         fs.delete(p, false)
       }
     }
+    staged.size
   }
 
   /** Idempotently append one micro-batch to the partitioned tree —
     * replay-safe at every crash boundary (see the object scaladoc for
-    * the enumeration and the deployment contract).
+    * the enumeration and the deployment contract). A batch whose staged
+    * write holds no data file (an empty batch) commits nothing: no cell,
+    * sentinel or manifest entry, so replaying it is a no-op too. Telling
+    * empty from the write's own output spares a separate probe job that
+    * would parse part of the batch a second time.
     */
   def publishBatch(batch: DataFrame, batchId: Long,
       partCols: Seq[String], outDir: String): Unit = {
@@ -389,8 +396,10 @@ object StreamingPublish {
       if (!fs.exists(sentinel)) {
         fs.delete(stage, true)
         PartitionedSink.write(batch, partCols, stage.toString)
-        promoteStaged(fs, stage, out, batchId,
-          copyFallback = !renameMarkers)
+        if (promoteStaged(fs, stage, out, batchId, copyFallback = !renameMarkers) == 0) {
+          fs.delete(stage, true)
+          return
+        }
         commitMarker(fs, renameMarkers, sentinel, s"done\n$Terminator\n")
       }
       // manifests are terminator-suffixed in BOTH modes, so a tree
@@ -416,5 +425,5 @@ object StreamingPublish {
     */
   def partitionedPublisher(partCols: Seq[String], outDir: String)
       : (DataFrame, Long) => Unit =
-    (batch, id) => if (!batch.isEmpty) publishBatch(batch, id, partCols, outDir)
+    (batch, id) => publishBatch(batch, id, partCols, outDir)
 }

@@ -395,4 +395,43 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(broadcasts ==
       broadcastsDuring(OpeningEnrichment.dimension(openings).collect()))
   }
+
+  test("the source window is clamp(cores, 2, 16)") {
+    assert(Seq(1, 4, 32).map(ChessPipeline.windowFor) == Seq(2, 4, 16))
+    assert(ChessPipeline.sourceConcurrency(spark) ==
+      ChessPipeline.windowFor(spark.sparkContext.defaultParallelism))
+  }
+
+  test("every job of a source stage is named after its stage and source") {
+    val d = Files.createTempDirectory("chess_sites")
+    val keys = Seq("src_a", "src_b")
+    val openings = spark.read.parquet(root.resolve("openings").toString)
+    val names = jobsDuring(ChessPipeline.run(spark, both(root), openings,
+      d.resolve("staging").toString, d.resolve("out").toString)).map(_._1)
+    assert(!names.exists(_.contains("CompletableFuture")), names.mkString(", "))
+    val (sourced, runLevel) = names.partition(n => keys.exists(k => n.endsWith(s" $k")))
+    for (k <- keys; st <- Seq("stage", "publish"))
+      assert(sourced.contains(s"$st $k"), names.mkString(", "))
+    // outside the source stages: the openings collect and the published count
+    assert(runLevel.count(_.startsWith("collect at ChessPipeline.scala")) == 1, names.mkString(", "))
+    assert(runLevel.size >= 2 && runLevel.count(_ == "published") == runLevel.size - 1,
+      names.mkString(", "))
+  }
+
+  test("a restaging run releases its trie broadcast") {
+    import org.apache.spark.graft.BlockManagerBridge
+    def tries() = BlockManagerBridge.broadcastIds(_.isInstanceOf[graft.ops.OpeningTrie])
+    val before = tries()
+    val d = Files.createTempDirectory("chess_release")
+    val openings = spark.read.parquet(root.resolve("openings").toString)
+    // checked right after each run: the release is asynchronous, but a
+    // leaked broadcast would wait for a GC and the context cleaner
+    for (i <- 1 to 2) {
+      ChessPipeline.run(spark, both(root), openings,
+        d.resolve(s"staging$i").toString, d.resolve(s"out$i").toString)
+      eventually(timeout(3.seconds), interval(10.millis)) {
+        assert((tries() -- before).isEmpty)
+      }
+    }
+  }
 }

@@ -206,4 +206,41 @@ class PgnDataSourceSpec extends AnyFunSuite with SparkTestBase {
     assert(multi == expected)
     assert(multi.map(_._1) == Seq("A1", "A2a", "A2b", "A3", "Q1a", "Q1b"))
   }
+
+  test("line iterator: offsets and lines under short reads, CRLF, long lines, no final newline") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import graft.sources.OffsetLineIterator
+    val rnd = new scala.util.Random(3)
+    // a stream that returns at most `k` bytes per read
+    def trickle(b: Array[Byte], k: Int) = new java.io.ByteArrayInputStream(b) {
+      override def read(buf: Array[Byte], off: Int, len: Int): Int =
+        super.read(buf, off, math.min(len, k))
+    }
+    // a lone '\r' ends no line
+    val samples = Seq("", "\n", "a", "a\n", "a\r\nb", "\n\nx\r\n", "a\rb\r\n\r", "é€\n\ud83d\ude00") ++
+      (1 to 12).map(_ => (1 to rnd.nextInt(20)).map(_ => rnd.nextInt(5) match {
+        case 0 => "\n"
+        case 1 => "\r\n"
+        case 2 => "x" * rnd.nextInt(70000)
+        case 3 => "é"
+        case _ => "[Event \"e\"]"
+      }).mkString)
+    for (text <- samples; k <- Seq(1, 7, 1 << 20)) {
+      val bytes = text.getBytes(UTF_8)
+      def line(a: Int, b: Int) = {
+        val e = if (b > a && bytes(b - 1) == '\r') b - 1 else b
+        new String(bytes, a, e - a, UTF_8)
+      }
+      // one line per '\n'-terminated piece, plus a non-empty unterminated tail
+      val ends = bytes.indices.filter(bytes(_) == '\n')
+      val starts = 0 +: ends.map(_ + 1)
+      val expected = starts.zip(ends :+ bytes.length)
+        .filter { case (a, b) => b < bytes.length || a < b }
+        .map { case (a, b) => (100L + a, line(a, b)) }
+      val it = new OffsetLineIterator(trickle(bytes, k), 100L)
+      val got = Iterator.continually(it.hasNext).takeWhile(identity)
+        .map(_ => (it.nextOffset, it.next())).toSeq
+      assert(got == expected, s"k=$k text of ${bytes.length} bytes")
+    }
+  }
 }

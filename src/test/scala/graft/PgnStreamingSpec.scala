@@ -859,4 +859,29 @@ class PgnStreamingSpec extends AnyFunSuite with SparkTestBase {
       == Seq("a_empty.pgn"),
       s"budget=1 must admit ONLY the empty file, got $admitted")
   }
+
+  test("an empty micro-batch publishes no file or cell, and replaying it is a no-op") {
+    import scala.jdk.CollectionConverters._
+    import graft.ops.ChessExport
+    import graft.pipeline.ChessPipeline
+    import graft.streaming.StreamingPublish
+    val dir = Files.createTempDirectory("pgn_pre1500")
+    Files.writeString(dir.resolve("old.pgn"),
+      fullGame("O1", "W1", "1499.12.31", "1. e4 e5") + "\n" +
+        fullGame("O2", "W2", "1201.06.01", "1. d4 d5"))
+    val games = spark.read.format("pgn").load(dir.toString)
+    assert(games.count() == 2)
+    // the catch-up's batch shape: every game dated before 1500 is dropped
+    val batch = ChessExport.exportProjection(ChessPipeline.normalize(games, "src_old"))
+    val out = Files.createTempDirectory("pub_empty")
+    def entries() = Files.walk(out).iterator().asScala
+      .map(out.relativize(_).toString).filter(_.nonEmpty).toSet
+    val publish = StreamingPublish.partitionedPublisher(Seq("DataSource", "year", "month"),
+      out.toString)
+    publish(batch, 0L)
+    assert(entries().isEmpty, entries())
+    publish(batch, 0L)
+    assert(entries().isEmpty, entries())
+    assert(StreamingPublish.committedBatches(out.toString).isEmpty)
+  }
 }
