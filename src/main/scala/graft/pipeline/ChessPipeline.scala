@@ -1,14 +1,14 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 import java.util.concurrent.{Executors, TimeUnit}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.chess
 import graft.ops.{ChessExport, OpeningEnrichment, OpeningTrie}
-import graft.sources.ForkFreeLocalFs
+import graft.sources.{ForkFreeLocalFs, PgnFiles}
 
 /** The whole-pipeline driver — Spark-native analog of the reference's DVC DAG
   * (SURVEY.md §3 E1-E3): per source `ingest → normalize → enrich → stage`,
@@ -24,19 +24,24 @@ import graft.sources.ForkFreeLocalFs
   * `DataSource=<key>` subtree ([[ChessExport.publish]]).
   *
   * Incrementality (the DVC content-hash analog, reference: dvc.lock): each
-  * source's enriched staging output carries a manifest recording a hash of
-  * the input file list (path, size, mtime), the qualified publish root, and
-  * whether the source's last publish left a subtree. When the manifest
-  * matches — same inputs, same `outDir`, and the subtree still there (or
-  * still absent) — the source is skipped and its staged parquet and
-  * published subtree are left as they are: same skip granularity as the
-  * reference (per source), without re-reading input bytes. The manifest is
-  * written only after the source's new subtree has been swapped into
-  * place, so a run that dies before the swap restages the source next
-  * time. The published tree thus always equals a from-scratch build: a
-  * restaged source's vanished cells go with its old subtree, a source
-  * dropped from the registry loses its subtree, and a deleted or new
-  * `outDir` is republished.
+  * source's staging output carries a manifest hashing exactly the file
+  * statuses its scan plans from ([[PgnFiles.list]]: qualified path, length,
+  * modification time), the qualified publish root, the openings
+  * fingerprint, and whether the source's last publish left a subtree. A
+  * matching manifest skips the source and leaves its staged parquet and
+  * published subtree as they are: per-source skip, as in the reference,
+  * without re-reading input bytes. The manifest is written only after the
+  * source's new subtree has been swapped into place, so a run that dies
+  * before the swap restages the source next time. The published tree thus
+  * always equals a from-scratch build: a restaged source's vanished cells
+  * go with its old subtree, a source dropped from the registry loses its
+  * subtree, and a deleted or new `outDir` is republished.
+  *
+  * `pgnDir` (a directory or a glob), `stagingDir` and `outDir` may be any
+  * Hadoop URI; `<stagingDir>/<key>/_graft_manifest` goes through the file
+  * system of `stagingDir`. One limit: `HfFileSystem` statuses carry
+  * modification time 0, so an `hf://` input is keyed by path and length
+  * only, and a same-length rewrite on the hub is not detected.
   */
 object ChessPipeline {
 
@@ -71,8 +76,7 @@ object ChessPipeline {
     * cluster. Bounded (not all-at-once) so a 1000-source corpus doesn't
     * hold 1000 write jobs' memory at the driver.
     *
-    * The window is DERIVED from the cluster shape, overridable via
-    * [[SourceConcurrencyKey]]: `clamp(cores, 2, 16)` ([[windowFor]]).
+    * The window is derived from the cluster shape: `clamp(cores, 2, 16)`.
     * One window slot per core: a source's stage is a chain of short jobs
     * with driver-side gaps between them (manifest checks, commit
     * barriers, a publish that waits on its staging write), and a small
@@ -82,16 +86,8 @@ object ChessPipeline {
     * (14.31 GB / 24 sources, BASELINE.md r11) showed the same pull
     * toward deeper windows: 2 → 420 s, 8 → 175–176 s, 16 → 161–164 s.
     * The floor of 2 preserves overlap on tiny boxes; the cap of 16 bounds
-    * driver-side job bookkeeping however wide the cluster (the 32-core
-    * box keeps its measured 16).
+    * driver-side job bookkeeping however wide the cluster.
     */
-  val SourceConcurrencyKey = "graft.pipeline.sourceConcurrency"
-
-  def sourceConcurrency(spark: SparkSession): Int =
-    spark.conf.getOption(SourceConcurrencyKey).map(_.toInt)
-      .getOrElse(windowFor(spark.sparkContext.defaultParallelism))
-
-  /** The derived window on `cores` cores: `clamp(cores, 2, 16)`. */
   def windowFor(cores: Int): Int = math.min(16, math.max(2, cores))
 
   /** Full run. `stagingDir` holds per-source enriched parquet + manifests;
@@ -119,18 +115,23 @@ object ChessPipeline {
     val openingsFp = sha256(dim.map(r => (0 until 4).map(r.get(_)).mkString("\u0001")).sorted)
     // the qualified outDir: staging reused against another outDir must
     // republish there
+    val conf = ForkFreeLocalFs.hadoopConf(spark)
     val out = new HPath(outDir)
-    val fs = out.getFileSystem(ForkFreeLocalFs.hadoopConf(spark))
+    val fs = out.getFileSystem(conf)
     val root = fs.makeQualified(out)
+    val sc = spark.sparkContext
     val manifests = sorted.map { s =>
-      s -> Seq(ManifestFormat, root, inputManifest(s.pgnDir), openingsFp).mkString("\n")
+      s -> Seq(ManifestFormat, root, inputManifest(s.pgnDir, sc.hadoopConfiguration), openingsFp)
+        .mkString("\n")
     }.toMap
     def manifest(s: Source, published: Boolean) = s"${manifests(s)}\npublished=$published"
     def stage(s: Source) = s"$stagingDir/${s.key}"
+    def manifestAt(s: Source) = new HPath(stage(s), "_graft_manifest")
+    val stagingFs = new HPath(stagingDir).getFileSystem(conf)
     // skip a source only while its subtree is as its last publish left it
     val stale = sorted.filterNot { s =>
       val published = fs.exists(new HPath(out, ChessExport.sourceDir(s.key)))
-      readManifest(stage(s)).contains(manifest(s, published))
+      readManifest(stagingFs, manifestAt(s)).contains(manifest(s, published))
     }
     val trie = if (stale.isEmpty) None else Some(OpeningEnrichment.broadcastTrie(spark, dim))
     // stage and publish sources in a bounded-concurrency window; each
@@ -139,9 +140,8 @@ object ChessPipeline {
     // RETURNED and printed in source order below — concurrent stages must
     // not interleave their report lines.
     import spark.implicits._
-    val sc = spark.sparkContext
     val pool = Executors.newFixedThreadPool(
-      math.max(1, math.min(sourceConcurrency(spark), stale.size)))
+      math.max(1, math.min(windowFor(sc.defaultParallelism), stale.size)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val reports = sorted.map { src =>
       if (!stale.contains(src))
@@ -167,7 +167,7 @@ object ChessPipeline {
         }
         // only after the swap: a run that dies before it leaves no
         // manifest, so the next run restages this source
-        writeManifest(stage(src), manifest(src, published))
+        writeManifest(stagingFs, manifestAt(src), manifest(src, published))
         val counts = obs.get.view.mapValues(_.asInstanceOf[Long])
         val bad = staged.filter(col("parse_error").isNotNull)
           .select(col("game_id"), col("Event"), col("parse_error"))
@@ -218,39 +218,38 @@ object ChessPipeline {
 
   /** First line of every manifest; changed whenever what a manifest
     * records changes, so one written by an older layout never matches. */
-  private val ManifestFormat = "graft-manifest/2"
+  private val ManifestFormat = "graft-manifest/3"
 
-  private def inputManifest(dir: String): String = {
-    val root = Paths.get(dir)
-    if (!Files.exists(root)) return "missing"
-    sha256(Files.walk(root).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.toString.toLowerCase.endsWith(".pgn"))
-      .toSeq.sortBy(_.toString)
-      .map(p => s"$p|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"))
-  }
+  /** Hash of the statuses the scan of `pgnDir` plans from, listed with
+    * the same call and conf. */
+  private def inputManifest(pgnDir: String, conf: Configuration): String =
+    sha256(PgnFiles.list(Seq(pgnDir), conf)
+      .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}"))
 
   /** Hex SHA-256 over `lines`, each newline-terminated. */
   private def sha256(lines: Seq[String]): String = {
     val md = MessageDigest.getInstance("SHA-256")
-    lines.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
+    lines.foreach(l => md.update((l + "\n").getBytes(UTF_8)))
     md.digest().map("%02x".format(_)).mkString
   }
 
-  private def manifestPath(stage: String) = Paths.get(stage, "_graft_manifest")
+  private def readManifest(fs: FileSystem, p: HPath): Option[String] =
+    Option.when(fs.exists(p)) {
+      val in = fs.open(p)
+      try new String(in.readAllBytes(), UTF_8).trim finally in.close()
+    }
 
-  private def readManifest(stage: String): Option[String] = {
-    val p = manifestPath(stage)
-    if (Files.exists(p)) Some(Files.readString(p).trim) else None
+  private def writeManifest(fs: FileSystem, p: HPath, m: String): Unit = {
+    val o = fs.create(p, true)
+    try o.write(m.getBytes(UTF_8)) finally o.close()
   }
-
-  private def writeManifest(stage: String, m: String): Unit =
-    Files.writeString(manifestPath(stage), m)
 }
 
 /** CLI: `runMain graft.pipeline.ChessPipelineMain <inRoot> <openingsUri> <stagingDir> <outDir>`
   * where each `<inRoot>/<sourceKey>/` directory holds that source's .pgn
   * files and `<openingsUri>` is any Hadoop-FS URI or recursive glob the
   * openings dimension lives under (see [[graft.sources.OpeningsSource]]).
+  * Every argument may be any Hadoop URI.
   */
 object ChessPipelineMain {
   def main(args: Array[String]): Unit = {
@@ -258,10 +257,10 @@ object ChessPipelineMain {
     val spark = chess.session("graft-chess-pipeline",
       s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
     spark.sparkContext.setLogLevel("WARN")
-    val sources = Files.list(Paths.get(inRoot)).iterator().asScala
-      .filter(Files.isDirectory(_))
-      .map(p => ChessPipeline.Source(p.getFileName.toString, p.toString))
-      .toSeq
+    val in = new HPath(inRoot)
+    val sources = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(in).toSeq.filter(_.isDirectory).map(_.getPath).sortBy(_.getName)
+      .map(p => ChessPipeline.Source(p.getName, p.toString))
     require(sources.nonEmpty, s"no source directory under $inRoot")
     val openings = graft.sources.OpeningsSource.load(spark, openingsPath)
     ChessPipeline.run(spark, sources, openings, stagingDir, outDir)

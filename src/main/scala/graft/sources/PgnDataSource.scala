@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -67,20 +67,25 @@ object PgnFiles {
       .map(json => new ObjectMapper().readValue(json, classOf[Array[String]]).toSeq)
       .getOrElse(options.get("path").toSeq)
 
-  /** Recursive .pgn discovery (globs + directories), sorted by path. The
-    * walk lists with `listStatus` ([[ForkFreeLocalFs.walkFiles]]), so no
-    * file's permissions are loaded: on `file:` that would fork `ls -ld`
-    * once per file, on every scan plan and every micro-batch poll.
+  /** The one definition of a source's input files: recursive .pgn
+    * discovery (globs + directories, any Hadoop scheme) returning each
+    * file's status, sorted by qualified path. A path that matches nothing
+    * lists as empty. The scan plans from it and the pipeline's manifest
+    * hashes it, so the two cannot disagree. The walk lists with
+    * `listStatus` ([[ForkFreeLocalFs.walkFiles]]), so no file's
+    * permissions are loaded: on `file:` that would fork `ls -ld` once per
+    * file, on every scan plan and every micro-batch poll. Callers read
+    * path, length and modification time only, for the same reason.
     */
-  def list(paths: Seq[String], conf: Configuration): Seq[(String, Long)] =
+  def list(paths: Seq[String], conf: Configuration): Seq[FileStatus] =
     paths.flatMap { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
       Option(fs.globStatus(path)).toSeq.flatten.flatMap { st =>
         if (!st.isDirectory) Seq(st)
         else ForkFreeLocalFs.walkFiles(fs, st.getPath)(_.toLowerCase.endsWith(".pgn"))
-      }.map(f => (f.getPath.toString, f.getLen))
-    }.sortBy(_._1)
+      }
+    }.sortBy(_.getPath.toString)
 
   /** Byte-range splits for one file — the SHARED planner of the batch scan
     * and the micro-batch stream (r9: a 1.43 GB monthly drop previously
@@ -176,8 +181,8 @@ class PgnScan(options: Map[String, String], required: StructType)
     // deterministic file order (reference sorts inputs,
     // src/export-to-parquet.ts:40-42) → stable fileIndex → stable game_id
     val sorted = PgnFiles.list(PgnFiles.paths(options), conf)
-    sorted.zipWithIndex.flatMap { case ((p, len), fileIdx) =>
-      PgnFiles.splitFile(p, fileIdx, len, splitBytes)
+    sorted.zipWithIndex.flatMap { case (f, fileIdx) =>
+      PgnFiles.splitFile(f.getPath.toString, fileIdx, f.getLen, splitBytes)
     }.toArray
   }
 

@@ -48,7 +48,11 @@ class PgnMicroBatchStream(options: Map[String, String], requiredCols: Array[Stri
     })
 
   private def listFiles(): Seq[String] =
-    PgnFiles.list(paths, conf).map { case (p, len) => sizes(p) = len; p }
+    PgnFiles.list(paths, conf).map { f =>
+      val p = f.getPath.toString
+      sizes(p) = f.getLen
+      p
+    }
 
   override def initialOffset(): Offset = PgnOffset(Seq.empty)
 

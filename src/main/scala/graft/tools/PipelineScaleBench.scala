@@ -90,10 +90,6 @@ object PipelineScaleBench {
       }
     }
 
-    // optional width pin: `conc=<n>` sets the source-stage concurrency
-    // conf (the r11 adaptive-window A/B rows)
-    args.find(_.startsWith("conc=")).foreach(a =>
-      spark.conf.set(ChessPipeline.SourceConcurrencyKey, a.substring(5)))
     // generic valve pin (r12): any `graft.*=<v>` arg becomes a session
     // conf — e.g. graft.stream.publish.mode=marker runs the catch-up
     // through the object-store marker protocol on the local tree
@@ -240,7 +236,7 @@ object PipelineScaleBench {
       s""""publish_cells":${cells.size},"publish_files":${parqs.size},""" +
       s""""max_files_per_cell":$maxPerCell,"out_bytes":$outBytes,""" +
       s""""skip_rerun_wall":${f(skipWall)},""" +
-      s""""source_concurrency":${ChessPipeline.sourceConcurrency(spark)}}"""
+      s""""source_concurrency":${ChessPipeline.windowFor(spark.sparkContext.defaultParallelism)}}"""
     spark.stop()
     println(json)
   }

@@ -279,6 +279,75 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(snapshot(d.resolve("staging"), out) == before)
   }
 
+  /** Cold-runs one source whose files live in `dir` and which the
+    * pipeline reads as `pgnDir`, adds a `.pgn` to `dir` and re-runs. The
+    * source must restage, and the tree must equal a from-scratch build.
+    */
+  private def restagesOnNewFile(dir: Path, pgnDir: String): Unit = {
+    Files.writeString(dir.resolve("jan.pgn"),
+      pgn("P1", "2020.01.15", "1. e4 e5 2. Nf3 Nc6 3. Bb5 a6"))
+    val d = Files.createTempDirectory("chess_forms")
+    val openings = spark.read.parquet(root.resolve("openings").toString)
+    def runInto(out: String) = ChessPipeline.run(spark, Seq(ChessPipeline.Source("src_a", pgnDir)),
+      openings, d.resolve(s"${out}_staging").toString, d.resolve(out).toString)
+    runInto("out")
+    val manifest = d.resolve("out_staging/src_a/_graft_manifest")
+    val cold = Files.readString(manifest)
+    Files.writeString(dir.resolve("feb.pgn"), pgn("P2", "2020.02.20", "1. d4 d5 2. c4 e6"))
+    runInto("out")
+    assert(Files.readString(manifest) != cold, "src_a was not restaged")
+    runInto("scratch")
+    assert(Files.exists(d.resolve("out/DataSource=src_a/year=2020/month=02")))
+    assert(cellsOf(d.resolve("out")) == cellsOf(d.resolve("scratch")))
+    assert(rowsOf(d.resolve("out")) == rowsOf(d.resolve("scratch")))
+  }
+
+  test("incremental re-run equals a from-scratch build: a source given as a file: URI restages on a new file") {
+    val dir = Files.createTempDirectory("chess_uri")
+    restagesOnNewFile(dir, s"file://$dir")
+  }
+
+  test("incremental re-run equals a from-scratch build: a source given as a glob restages on a new file") {
+    val dir = Files.createTempDirectory("chess_glob")
+    restagesOnNewFile(dir, s"$dir/*.pgn")
+  }
+
+  test("incremental re-run equals a from-scratch build: an hf:// source restages on a new file") {
+    // a hub-shaped local tree served by the offline transport; the FS cache
+    // is bypassed so no hf:// instance mounted on another root serves it
+    val hub = Files.createTempDirectory("chess_hf")
+    val dir = Files.createDirectories(hub.resolve("datasets/graft/pgn-src/data"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val set = Map(
+      "fs.hf.impl" -> classOf[graft.sources.HfFileSystem].getName,
+      "fs.hf.transport.impl" -> classOf[graft.sources.LocalHfTransport].getName,
+      "fs.hf.test.root" -> hub.toString,
+      "fs.hf.impl.disable.cache" -> "true")
+    val saved = set.keys.map(k => k -> Option(conf.get(k)))
+    set.foreach { case (k, v) => conf.set(k, v) }
+    try restagesOnNewFile(dir, "hf://datasets/graft/pgn-src/data")
+    finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  test("file: URI staging and publish dirs: the re-run skips every source and touches no file") {
+    val d = Files.createTempDirectory("chess_uri_dirs")
+    val openings = spark.read.parquet(root.resolve("openings").toString)
+    def runIt() = ChessPipeline.run(spark, both(root), openings,
+      s"file://${d.resolve("staging")}", s"file://${d.resolve("out")}")
+    runIt()
+    assert(Files.exists(d.resolve("staging/src_b/_graft_manifest")))
+    val before = snapshot(d.resolve("staging"), d.resolve("out"))
+    val log = new java.io.ByteArrayOutputStream
+    Console.withOut(log)(runIt())
+    for (k <- Seq("src_a", "src_b"))
+      assert(log.toString.contains(s"[pipeline] skip $k (manifest match)"), log.toString)
+    assert(snapshot(d.resolve("staging"), d.resolve("out")) == before)
+    assert(rowsOf(d.resolve("out")).size == 3)
+  }
+
   private def deleteTree(p: Path): Unit =
     Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete(_))
 
@@ -397,9 +466,7 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("the source window is clamp(cores, 2, 16)") {
-    assert(Seq(1, 4, 32).map(ChessPipeline.windowFor) == Seq(2, 4, 16))
-    assert(ChessPipeline.sourceConcurrency(spark) ==
-      ChessPipeline.windowFor(spark.sparkContext.defaultParallelism))
+    assert(Seq(1, 2, 4, 16, 32).map(ChessPipeline.windowFor) == Seq(2, 2, 4, 16, 16))
   }
 
   test("every job of a source stage is named after its stage and source") {

@@ -10,8 +10,11 @@ import org.apache.hadoop.fs.RawLocalFileSystem
   * reference uses for its hf:// dataset glob — is EXECUTED through a
   * non-`file:` scheme, not just documented: scheme resolution, recursive
   * listing, glob filtering, and parquet footer reads all go through this
-  * FileSystem instance. (Hadoop instantiates it reflectively, so it must be
-  * a top-level class with a no-arg constructor.)
+  * FileSystem instance. PgnStreamingSpec uses it as an object store: the
+  * scheme is outside StreamingPublish's atomic-rename set, so publishes to
+  * it take the marker path, and a forced rename mode is refused. (Hadoop
+  * instantiates it reflectively, so it must be a top-level class with a
+  * no-arg constructor.)
   */
 class MockRemoteFs extends RawLocalFileSystem {
   override def getScheme: String = "mockfs"

@@ -188,10 +188,20 @@ class PgnDataSourceSpec extends AnyFunSuite with SparkTestBase {
     assert(PgnFiles.paths(Map("paths" -> json)) == paths)
 
     val conf = spark.sparkContext.hadoopConfiguration
-    val perDir = paths.map(p => PgnFiles.list(Seq(p), conf).map(_._1))
-    val all = PgnFiles.list(paths, conf).map(_._1)
+    val perDir = paths.map(p => PgnFiles.list(Seq(p), conf).map(_.getPath.toString))
+    val all = PgnFiles.list(paths, conf).map(_.getPath.toString)
     assert(all == perDir.flatten.sorted)
     assert(all.size == 4 && all.forall(_.toLowerCase.endsWith(".pgn")))
+
+    // a directory, its file: URI and its /*.pgn glob list the same files
+    // with the lengths and modification times on disk
+    def statuses(p: String) = PgnFiles.list(Seq(p), conf)
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    val x = dirs(1).resolve("x.pgn")
+    val onDisk = Seq((s"file:$x", Files.size(x), Files.getLastModifiedTime(x).toMillis))
+    for (p <- Seq(dirs(1).toString, s"file://${dirs(1)}", s"${dirs(1)}/*.pgn"))
+      assert(statuses(p) == onDisk, p)
+    assert(statuses(s"file://${dirs(0)}") == statuses(dirs(0).toString))
 
     // a per-dir game_id rebased onto the combined file order
     val offset = (1L << 40) - 1

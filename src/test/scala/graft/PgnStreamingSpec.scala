@@ -414,24 +414,24 @@ class PgnStreamingSpec extends AnyFunSuite with SparkTestBase {
     val s = spark
     import s.implicits._
     spark.sparkContext.hadoopConfiguration
-      .set("fs.norenfs.impl", classOf[NoRenameFs].getName)
+      .set("fs.mockfs.impl", classOf[MockRemoteFs].getName)
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "p")
     // auto (default): a scheme outside the atomic-rename set publishes
     // via conditional-create markers instead of being refused (r12) —
     // and the replay path stays idempotent through the custom FS
-    val outAuto = s"norenfs://${Files.createTempDirectory("pub_auto")}"
+    val outAuto = s"mockfs://${Files.createTempDirectory("pub_auto")}"
     StreamingPublish.publishBatch(df, 0L, Seq("p"), outAuto)
     assert(spark.read.parquet(outAuto).count() == 2)
     StreamingPublish.publishBatch(df, 0L, Seq("p"), outAuto)
     assert(spark.read.parquet(outAuto).count() == 2)
     // forcing rename mode onto that scheme keeps the pre-r12 refusal
     spark.conf.set(StreamingPublish.ModeKey, "rename")
-    val outForce = s"norenfs://${Files.createTempDirectory("pub_force")}"
+    val outForce = s"mockfs://${Files.createTempDirectory("pub_force")}"
     try {
       val e = intercept[IllegalStateException] {
         StreamingPublish.publishBatch(df, 0L, Seq("p"), outForce)
       }
-      assert(e.getMessage.contains("norenfs"), e.getMessage)
+      assert(e.getMessage.contains("mockfs"), e.getMessage)
       assert(e.getMessage.contains(StreamingPublish.AssumeAtomicRenameKey))
       // with the override asserted, forced rename publishes fine
       spark.conf.set(StreamingPublish.AssumeAtomicRenameKey, "true")
@@ -755,7 +755,7 @@ class PgnStreamingSpec extends AnyFunSuite with SparkTestBase {
     val dir: Path = Files.createTempDirectory("pgn_cap")
     val conf = spark.sparkContext.hadoopConfiguration
     val opts = Map("path" -> dir.toString)
-    def listed() = PgnFiles.list(Seq(dir.toString), conf).map(_._1)
+    def listed() = PgnFiles.list(Seq(dir.toString), conf).map(_.getPath.toString)
     Files.writeString(dir.resolve("a.pgn"), game("A", "1. e4 e5"))
     val Seq(aP) = listed()
 
@@ -829,7 +829,7 @@ class PgnStreamingSpec extends AnyFunSuite with SparkTestBase {
       Files.writeString(dir.resolve(s"f$i.pgn"), game(s"E$i", "1. e4 e5")))
     val conf = spark.sparkContext.hadoopConfiguration
     val listed = PgnFiles.list(Seq(dir.toString), conf)
-    val Seq((f1, s1), (f2, s2), (_, _)) = listed
+    val Seq((f1, s1), (f2, s2), _) = listed.map(f => (f.getPath.toString, f.getLen))
     val stream = new PgnMicroBatchStream(Map("path" -> dir.toString), Array("Event"))
     def files(lim: ReadLimit) =
       stream.latestOffset(stream.initialOffset(), lim).asInstanceOf[PgnOffset].files
